@@ -18,6 +18,7 @@ step 0).
 from __future__ import annotations
 
 import json
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F

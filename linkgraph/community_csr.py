@@ -32,7 +32,7 @@ Like labelprop_csr, the label VALUE space is the dense id-rank (0..n-1
 ascending-id order, float64-exact), mapped back to ids with one join at
 the end; labels travel the per-step .npy file transport (O(B) files per
 round, page-cache shared, resumable — the step directory IS the
-checkpoint, marker contract of ``_lp_completed``).
+checkpoint, marker contract of ``supersteps.completed_steps``).
 
 Store contract: build the BlockedGraph from ``undirected_edges(edges)``
 (distinct symmetric closure, self-loops dropped) — k_{i,c} COUNTS are
@@ -56,7 +56,6 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 import time
 import uuid
 
@@ -66,13 +65,18 @@ from pyspark.sql import DataFrame, functions as F
 
 from . import native
 from .caching import register_cache
-from .labelprop_csr import _lp_completed, id_ranks
+from .labelprop_csr import _vote_stats, id_ranks
 from .lineage import truncate_plan
-from .pagerank_csr import (
-    BlockedGraph,
-    _load_block,
-    _ranks_root,
+from .pagerank_csr import BlockedGraph, _load_block, _ranks_root
+from .supersteps import (
     _write_npy_atomic,
+    cached,
+    completed_steps,
+    gather_in,
+    map_blocks,
+    read_blocks,
+    run_steps,
+    work_index,
 )
 
 
@@ -126,7 +130,7 @@ def louvain_blocked(
     stride = (n + n_blocks - 1) // n_blocks if n else 1
     rdir = run_dir or f"{_ranks_root(g)}/louv-{uuid.uuid4().hex[:12]}"
     os.makedirs(f"{rdir}/part", exist_ok=True)
-    done = _lp_completed(rdir) if run_dir else []
+    done = completed_steps(rdir) if run_dir else []
     start = len(done)
     if start > rounds:
         raise ValueError(
@@ -188,169 +192,79 @@ def louvain_blocked(
             .count()
         )
 
-    work = truncate_plan(
-        g.block_meta.select(
-            F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
-    )
+    work = work_index(g)
 
-    step_secs: list[float] = [0.0] * start  # resumed rounds: no wall
-    kernel_secs: list[float] = [float(d[1]) for d in done]
-    changed_per_step: list[int] = [int(d[0]) for d in done]
-    for step in range(start, rounds):
-        t_step = time.perf_counter()
-        cur, nxt = f"{rdir}/step{step}", f"{rdir}/step{step + 1}"
-        totp, totd = f"{rdir}/totp{step}", f"{rdir}/tot{step}"
+    def step(k, cur, nxt):
+        totp, totd = f"{rdir}/totp{k}", f"{rdir}/tot{k}"
 
         # tot job: per label stripe t, sum the ≤B (label, Σdeg) partial
         # files into the dense stripe vector. Recomputed idempotently on
         # resume (partials are complete before the round marker lands).
-        def make_tot_fn(_totp, _totd):
-            def tot_fn(batches):
-                rows = []
-                for pdf in batches:
-                    for t in pdf["db"]:
-                        t = int(t)
-                        size = min(stride, n - t * stride)
-                        if size <= 0:
-                            rows.append((t,))
-                            continue
-                        acc = np.zeros(size, dtype=np.float64)
-                        for fn in glob.glob(f"{_totp}/t{t}_s*.npy"):
-                            pair = np.load(fn)
-                            acc[
-                                pair[0].astype(np.int64) - t * stride
-                            ] += pair[1]
-                        os.makedirs(_totd, exist_ok=True)
-                        _write_npy_atomic(f"{_totd}/b{t}.npy", acc)
-                        rows.append((t,))
-                yield pd.DataFrame(rows, columns=["block"])
+        def tot_kernel(t, _dsize, _cache):
+            size = min(stride, n - t * stride)
+            if size > 0:
+                acc = np.zeros(size, dtype=np.float64)
+                for fn in glob.glob(f"{totp}/t{t}_s*.npy"):
+                    pair = np.load(fn)
+                    acc[pair[0].astype(np.int64) - t * stride] += pair[1]
+                os.makedirs(totd, exist_ok=True)
+                _write_npy_atomic(f"{totd}/b{t}.npy", acc)
+            return (max(size, 0),)
 
-            return tot_fn
-
-        work.mapInPandas(make_tot_fn(totp, totd), "block int").count()
+        map_blocks(work, tot_kernel, "size long")
 
         # move job: the per-destination-block vote (module docstring)
-        def make_step_fn(_cur, _nxt, _totd, _next_step):
-            def step_fn(batches):
-                dfs = [b for b in batches if len(b)]
-                if not dfs:
-                    return
-                pdf = pd.concat(dfs, ignore_index=True)
-                rows = []
-                lbl_cache: dict = {}
-                tot_cache: dict = {}
-
-                def tot_of(vals: np.ndarray) -> np.ndarray:
-                    idx = vals.astype(np.int64)
-                    ts = idx // stride
-                    out = np.empty(len(vals), dtype=np.float64)
-                    for t in np.unique(ts):
-                        t = int(t)
-                        s = tot_cache.get(t)
-                        if s is None:
-                            s = np.load(f"{_totd}/b{t}.npy")
-                            tot_cache[t] = s
-                        mask = ts == t
-                        out[mask] = s[idx[mask] - t * stride]
-                    return out
-
-                for db, dsize in zip(pdf["db"], pdf["dsize"]):
-                    db = int(db)
-                    t_k = time.perf_counter()
-                    old = np.load(f"{_cur}/b{db}.npy")
-                    kdeg = np.load(f"{rdir}/deg/b{db}.npy")
-                    acc = old.copy()
-                    blk = _load_block(store, token, db, n_blocks)
-                    offs = blk[1]
-                    labs, dls = [], []
-                    for sb in np.flatnonzero(np.diff(offs)):
-                        a, b_ = int(offs[sb]), int(offs[sb + 1])
-                        ls = lbl_cache.get(sb)
-                        if ls is None:
-                            ls = np.load(f"{_cur}/b{sb}.npy")
-                            lbl_cache[sb] = ls
-                        if blk[0] == "p":
-                            lab, dl = native.gather_labels_pack16(
-                                blk[2][a:b_], ls
-                            )
-                        else:
-                            lab = native.gather_labels32(blk[2][a:b_], ls)
-                            dl = np.ascontiguousarray(
-                                blk[3][a:b_], dtype=np.int32
-                            )
-                        labs.append(lab)
-                        dls.append(dl)
-                    if labs:
-                        lab_all = np.concatenate(labs)
-                        dl_all = np.concatenate(dls)
-                        native.louvain_vote(
-                            dl_all, lab_all, tot_of(lab_all),
-                            kdeg, old, tot_of(old), two_m, acc,
-                        )
-                    changed = int((acc != old).sum())
-                    os.makedirs(_nxt, exist_ok=True)
-                    _write_npy_atomic(f"{_nxt}/b{db}.npy", acc)
-                    _emit_tot_partials(
-                        rdir, _next_step, db, acc, kdeg, stride
+        def kernel(db, dsize, cache):
+            def tot_of(vals: np.ndarray) -> np.ndarray:
+                idx = vals.astype(np.int64)
+                ts = idx // stride
+                out = np.empty(len(vals), dtype=np.float64)
+                for t in np.unique(ts):
+                    t = int(t)
+                    s = cached(
+                        cache, ("tot", t),
+                        lambda key: np.load(f"{totd}/b{key[1]}.npy"),
                     )
-                    rows.append((db, changed, time.perf_counter() - t_k))
-                yield pd.DataFrame(
-                    rows, columns=["block", "changed", "kern"]
+                    mask = ts == t
+                    out[mask] = s[idx[mask] - t * stride]
+                return out
+
+            t_k = time.perf_counter()
+            old = np.load(f"{cur}/b{db}.npy")
+            kdeg = np.load(f"{rdir}/deg/b{db}.npy")
+            acc = old.copy()
+            lab, dl = gather_in(
+                _load_block(store, token, db, n_blocks), cache,
+                lambda sb: np.load(f"{cur}/b{sb}.npy"),
+            )
+            if len(lab):
+                native.louvain_vote(
+                    dl, lab, tot_of(lab), kdeg, old, tot_of(old), two_m, acc,
                 )
+            os.makedirs(nxt, exist_ok=True)
+            _write_npy_atomic(f"{nxt}/b{db}.npy", acc)
+            _emit_tot_partials(rdir, k + 1, db, acc, kdeg, stride)
+            return int((acc != old).sum()), time.perf_counter() - t_k
 
-            return step_fn
+        return map_blocks(work, kernel, "changed long, kern double")
 
-        agg = (
-            work.mapInPandas(make_step_fn(cur, nxt, totd, step + 1),
-                             "block int, changed long, kern double")
-            .agg(F.sum("changed").alias("c"), F.sum("kern").alias("k"))
-            .collect()[0]
-        )
-        changed = int(agg["c"])
-        kernel_secs.append(float(agg["k"]))
-        step_secs.append(time.perf_counter() - t_step)
-        changed_per_step.append(changed)
-        # completion marker AFTER the agg (resume contract)
-        _write_npy_atomic(
-            f"{rdir}/part/g{step}.npy",
-            np.array([changed, float(agg["k"])], dtype=np.float64),
-        )
-        stale = step - keep_steps + 1
-        if stale >= 0:
-            for d in (f"step{stale}", f"tot{stale}", f"totp{stale}"):
-                shutil.rmtree(f"{rdir}/{d}", ignore_errors=True)
+    # completion marker AFTER the move job's agg (resume contract)
+    ran = run_steps(
+        rdir, step, start, rounds, keep_steps, dirs=("step", "tot", "totp"),
+        marker=True,
+    )
     last = f"{rdir}/step{rounds}"
-    if stats is not None:
-        stats["step_secs"] = [round(s, 3) for s in step_secs]
-        stats["kernel_secs"] = [round(s, 3) for s in kernel_secs]
-        stats["steps"] = rounds
-        stats["changed"] = changed_per_step
-        stats["final_dir"] = last
-        stats["run_dir"] = rdir
-
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            out.append((b, np.load(f"{last}/b{b}.npy")))
-        return pd.DataFrame(out, columns=["block", "lv"])
+    _vote_stats(stats, done, ran, last, rdir)
 
     from .joinhints import fits_broadcast
 
-    bcast = fits_broadcast(g.n)
-    vm = F.broadcast(g.vmap) if bcast else g.vmap
-    final = (
-        g.block_meta.groupBy("block")
-        .applyInPandas(read_kernel, "block int, lv array<double>")
-        .select("block", F.posexplode("lv").alias("local", "flabel"))
-        .join(vm, ["block", "local"])
-        .select("id", F.col("flabel").cast("long").alias("flabel"))
+    final = read_blocks(g, last, {"flabel": "b"}).select(
+        "id", F.col("flabel").cast("long").alias("flabel")
     )
     # rank -> owning vertex id: the inverse of the init mapping
     owner = ranks.select(
         F.col("rank").alias("flabel"), F.col("id").alias("label")
     )
     return final.join(
-        F.broadcast(owner) if bcast else owner, "flabel"
+        F.broadcast(owner) if fits_broadcast(g.n) else owner, "flabel"
     ).select("id", "label")

@@ -38,24 +38,26 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from . import native
+from .graph import sym_pairs
 from .lineage import truncate_plan
-from .pagerank_csr import (
-    BlockedGraph,
-    _load_block,
-    _ranks_root,
+from .pagerank_csr import BlockedGraph, _load_block, _ranks_root
+from .supersteps import (
     _write_npy_atomic,
+    fill_blocks,
+    map_blocks,
+    read_blocks,
+    run_steps,
+    scatter_in,
+    seed_blocks,
     vmap_side,
+    work_index,
 )
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
-    """edges(src,dst) -> both directions (weak-connectivity input)."""
-    return edges.select("src", "dst").unionByName(
-        edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
-    )
+    """edges(src,dst) -> both directions (weak-connectivity input), in
+    one exploded pass; duplicates and self-loops are kept."""
+    return sym_pairs(edges, "src", "dst")
 
 
 def connected_components_blocked(
@@ -104,84 +106,31 @@ def connected_components_blocked(
         prep_kernel, "block int"
     ).count()
 
-    work = truncate_plan(
-        g.block_meta.select(
-            F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
+    work = work_index(g)
+
+    def step(k, cur, nxt):
+        def kernel(db, dsize, cache):
+            old = np.load(f"{cur}/b{db}.npy")
+            acc = scatter_in(
+                _load_block(store, token, db, n_blocks), cache,
+                lambda sb: np.load(f"{cur}/b{sb}.npy", mmap_mode="r"),
+                old.copy(), op="min",
+            )
+            os.makedirs(nxt, exist_ok=True)
+            _write_npy_atomic(f"{nxt}/b{db}.npy", acc)
+            return (int((acc != old).sum()),)
+
+        return map_blocks(work, kernel, "changed long")
+
+    done = run_steps(
+        rdir, step, 0, max_iter, keep_steps, stop=lambda s: s[0] == 0
     )
-
-    import time as _time
-
-    step_secs: list[float] = []
-    steps = 0
-    for step in range(max_iter):
-        t_step = _time.perf_counter()
-        cur, nxt = f"{rdir}/step{step}", f"{rdir}/step{step + 1}"
-
-        def make_step_fn(_cur, _nxt):
-            def step_fn(batches):
-                dfs = [b for b in batches if len(b)]
-                if not dfs:
-                    return
-                pdf = pd.concat(dfs, ignore_index=True)
-                rows = []
-                lbl_cache: dict = {}
-                for db, dsize in zip(pdf["db"], pdf["dsize"]):
-                    db = int(db)
-                    old = np.load(f"{_cur}/b{db}.npy")
-                    acc = old.copy()
-                    blk = _load_block(store, token, db, n_blocks)
-                    offs = blk[1]
-                    for sb in np.flatnonzero(np.diff(offs)):
-                        a, b_ = int(offs[sb]), int(offs[sb + 1])
-                        ls = lbl_cache.get(sb)
-                        if ls is None:
-                            ls = np.load(f"{_cur}/b{sb}.npy", mmap_mode="r")
-                            lbl_cache[sb] = ls
-                        if blk[0] == "p":
-                            native.scatter_min_pack16(blk[2][a:b_], ls, acc)
-                        else:
-                            native.scatter_min32(
-                                blk[2][a:b_], blk[3][a:b_], ls, acc
-                            )
-                    changed = int((acc != old).sum())
-                    os.makedirs(_nxt, exist_ok=True)
-                    _write_npy_atomic(f"{_nxt}/b{db}.npy", acc)
-                    rows.append((db, changed))
-                yield pd.DataFrame(rows, columns=["block", "changed"])
-
-            return step_fn
-
-        changed = int(
-            work.mapInPandas(make_step_fn(cur, nxt), "block int, changed long")
-            .agg(F.sum("changed").alias("c"))
-            .collect()[0]["c"]
-        )
-        steps = step + 1
-        step_secs.append(_time.perf_counter() - t_step)
-        stale = step - keep_steps + 1
-        if stale >= 0:
-            shutil.rmtree(f"{rdir}/step{stale}", ignore_errors=True)
-        if changed == 0:
-            break
     if stats is not None:
-        stats["step_secs"] = [round(s, 3) for s in step_secs]
-        stats["steps"] = steps
-
-    last = f"{rdir}/step{steps}"
-
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            out.append((b, np.load(f"{last}/b{b}.npy")))
-        return pd.DataFrame(out, columns=["block", "lv"])
+        stats["step_secs"] = [round(secs, 3) for _, secs in done]
+        stats["steps"] = len(done)
 
     labels = (
-        g.block_meta.groupBy("block")
-        .applyInPandas(read_kernel, "block int, lv array<double>")
-        .select("block", F.posexplode("lv").alias("local", "glabel"))
-        .join(vmap_side(g), ["block", "local"])
+        read_blocks(g, f"{rdir}/step{len(done)}", {"glabel": "b"})
         .select("id", F.col("glabel").cast("long").alias("glabel"))
     )
     # min-INDEX label -> min vertex ID per component (exactly the flat
@@ -210,8 +159,6 @@ def bfs_distances_blocked(
     current vector — the same single-stage map job as the min-label CC
     superstep, zero shuffle, with the frontier bound coming from the
     FIXED unrolled hop count (the scalable bounded-radius form)."""
-    import time as _time  # noqa: F401  (parity with sibling supersteps)
-
     n_blocks, store, token = g.n_blocks, g.store_path, g.build_token
     rdir = f"{_ranks_root(g)}/bfs-{uuid.uuid4().hex[:12]}"
     os.makedirs(rdir, exist_ok=True)
@@ -219,103 +166,29 @@ def bfs_distances_blocked(
     # step0: inf everywhere, 0 at seed positions. Blocks without seeds
     # get their all-inf file from the first (sizes-only) job; seed blocks
     # are then atomically overwritten by the seed job.
-    def inf_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        os.makedirs(f"{rdir}/step0", exist_ok=True)
-        for b, size in zip(pdf["block"], pdf["size"]):
-            _write_npy_atomic(
-                f"{rdir}/step0/b{int(b)}.npy",
-                np.full(int(size), np.inf, dtype=np.float64),
+    fill_blocks(g, f"{rdir}/step0", np.inf)
+    pos = seeds.select("id").distinct().join(vmap_side(g), "id")
+    seed_blocks(g, pos, f"{rdir}/step0", np.inf, 0.0)
+
+    work = work_index(g)
+
+    def step(k, cur, nxt):
+        def kernel(db, dsize, cache):
+            acc = scatter_in(
+                _load_block(store, token, db, n_blocks), cache,
+                lambda sb: np.load(f"{cur}/b{sb}.npy") + 1.0,
+                np.load(f"{cur}/b{db}.npy").copy(), op="min",
             )
-        return pd.DataFrame({"block": [int(b) for b in pdf["block"]]})
+            os.makedirs(nxt, exist_ok=True)
+            _write_npy_atomic(f"{nxt}/b{db}.npy", acc)
+            return (int(np.isfinite(acc).sum()),)
 
-    g.block_meta.groupBy("block").applyInPandas(
-        inf_kernel, "block int"
-    ).count()
+        return map_blocks(work, kernel, "reached long")
 
-    sizes_by_block = g.block_meta.select("block", "size")
-
-    def seed_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = int(pdf["block"].iloc[0])
-        arr = np.full(int(pdf["size"].iloc[0]), np.inf, dtype=np.float64)
-        arr[pdf["local"].to_numpy(dtype=np.int64)] = 0.0
-        _write_npy_atomic(f"{rdir}/step0/b{b}.npy", arr)
-        return pd.DataFrame({"block": [b]})
-
-    (
-        seeds.select("id").distinct()
-        .join(vmap_side(g), "id")
-        .join(sizes_by_block, "block")
-        .select("block", "local", "size")
-        .groupBy("block")
-        .applyInPandas(seed_kernel, "block int")
-        .count()
-    )
-
-    work = truncate_plan(
-        g.block_meta.select(
-            F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
-    )
-
-    for step in range(max_hops):
-        cur, nxt = f"{rdir}/step{step}", f"{rdir}/step{step + 1}"
-
-        def make_step_fn(_cur, _nxt):
-            def step_fn(batches):
-                dfs = [b for b in batches if len(b)]
-                if not dfs:
-                    return
-                pdf = pd.concat(dfs, ignore_index=True)
-                rows = []
-                vec_cache: dict = {}
-                for db in pdf["db"]:
-                    db = int(db)
-                    acc = np.load(f"{_cur}/b{db}.npy").copy()
-                    blk = _load_block(store, token, db, n_blocks)
-                    offs = blk[1]
-                    for sb in np.flatnonzero(np.diff(offs)):
-                        a, b_ = int(offs[sb]), int(offs[sb + 1])
-                        vs = vec_cache.get(sb)
-                        if vs is None:
-                            vs = np.load(f"{_cur}/b{sb}.npy") + 1.0
-                            vec_cache[sb] = vs
-                        if blk[0] == "p":
-                            native.scatter_min_pack16(blk[2][a:b_], vs, acc)
-                        else:
-                            native.scatter_min32(
-                                blk[2][a:b_], blk[3][a:b_], vs, acc
-                            )
-                    os.makedirs(_nxt, exist_ok=True)
-                    _write_npy_atomic(f"{_nxt}/b{db}.npy", acc)
-                    rows.append((db, int(np.isfinite(acc).sum())))
-                yield pd.DataFrame(rows, columns=["block", "reached"])
-
-            return step_fn
-
-        (
-            work.mapInPandas(make_step_fn(cur, nxt), "block int, reached long")
-            .agg(F.sum("reached"))
-            .collect()
-        )
-        stale = step - keep_steps + 1
-        if stale >= 0:
-            shutil.rmtree(f"{rdir}/step{stale}", ignore_errors=True)
-
-    last = f"{rdir}/step{max_hops}"
-
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            out.append((b, np.load(f"{last}/b{b}.npy")))
-        return pd.DataFrame(out, columns=["block", "dv"])
-
+    run_steps(rdir, step, 0, max_hops, keep_steps)
     out = truncate_plan(
-        g.block_meta.groupBy("block")
-        .applyInPandas(read_kernel, "block int, dv array<double>")
-        .select("block", F.posexplode("dv").alias("local", "d"))
+        read_blocks(g, f"{rdir}/step{max_hops}", {"d": "b"})
         .where(F.col("d") != float("inf"))
-        .join(vmap_side(g), ["block", "local"])
         .select("id", F.col("d").cast("int").alias("dist")),
         eager=False,
     )
@@ -349,107 +222,39 @@ def kcore_blocked(
     rdir = f"{_ranks_root(g)}/kcore-{uuid.uuid4().hex[:12]}"
     os.makedirs(rdir, exist_ok=True)
 
-    def ones_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        os.makedirs(f"{rdir}/alive0", exist_ok=True)
-        for b, size in zip(pdf["block"], pdf["size"]):
-            _write_npy_atomic(
-                f"{rdir}/alive0/b{int(b)}.npy",
-                np.ones(int(size), dtype=np.float64),
-            )
-        return pd.DataFrame({"block": [int(b) for b in pdf["block"]]})
-
-    g.block_meta.groupBy("block").applyInPandas(
-        ones_kernel, "block int"
-    ).count()
-
-    work = truncate_plan(
-        g.block_meta.select(
-            F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
-    )
+    fill_blocks(g, f"{rdir}/alive0", 1.0)
+    work = work_index(g)
 
     n_rounds = rounds if rounds is not None else max_iter
     if n_rounds < 1:
         raise ValueError("kcore_blocked needs rounds >= 1 (or rounds=None)")
-    done = 0
-    for step in range(n_rounds):
-        cur = f"{rdir}/alive{step}"
-        nxt = f"{rdir}/alive{step + 1}"
-        degd = f"{rdir}/deg{step + 1}"
 
-        def make_step_fn(_cur, _nxt, _deg):
-            def step_fn(batches):
-                dfs = [b for b in batches if len(b)]
-                if not dfs:
-                    return
-                pdf = pd.concat(dfs, ignore_index=True)
-                rows = []
-                vec_cache: dict = {}
-                for db, dsize in zip(pdf["db"], pdf["dsize"]):
-                    db, dsize = int(db), int(dsize)
-                    acc = np.zeros(dsize, dtype=np.float64)
-                    blk = _load_block(store, token, db, n_blocks)
-                    offs = blk[1]
-                    for sb in np.flatnonzero(np.diff(offs)):
-                        a, b_ = int(offs[sb]), int(offs[sb + 1])
-                        vs = vec_cache.get(sb)
-                        if vs is None:
-                            vs = np.load(f"{_cur}/b{sb}.npy")
-                            vec_cache[sb] = vs
-                        if blk[0] == "p":
-                            native.scatter_add_pack16(blk[2][a:b_], vs, acc)
-                        else:
-                            native.scatter_add32(
-                                blk[2][a:b_], blk[3][a:b_], vs, acc
-                            )
-                    old = np.load(f"{_cur}/b{db}.npy")
-                    new = old * (acc >= k)
-                    os.makedirs(_nxt, exist_ok=True)
-                    os.makedirs(_deg, exist_ok=True)
-                    _write_npy_atomic(f"{_nxt}/b{db}.npy", new)
-                    _write_npy_atomic(f"{_deg}/b{db}.npy", acc)
-                    rows.append((db, int((new != old).sum())))
-                yield pd.DataFrame(rows, columns=["block", "changed"])
+    def step(r, cur, nxt):
+        degd = f"{rdir}/deg{r + 1}"
 
-            return step_fn
-
-        changed = int(
-            work.mapInPandas(
-                make_step_fn(cur, nxt, degd), "block int, changed long"
+        def kernel(db, dsize, cache):
+            acc = scatter_in(
+                _load_block(store, token, db, n_blocks), cache,
+                lambda sb: np.load(f"{cur}/b{sb}.npy"),
+                np.zeros(dsize, dtype=np.float64),
             )
-            .agg(F.sum("changed").alias("c"))
-            .collect()[0]["c"]
-        )
-        done = step + 1
-        stale = step - keep_steps + 1
-        if stale >= 0:
-            shutil.rmtree(f"{rdir}/alive{stale}", ignore_errors=True)
-            shutil.rmtree(f"{rdir}/deg{stale}", ignore_errors=True)
-        if rounds is None and changed == 0:
-            break
+            old = np.load(f"{cur}/b{db}.npy")
+            new = old * (acc >= k)
+            os.makedirs(nxt, exist_ok=True)
+            os.makedirs(degd, exist_ok=True)
+            _write_npy_atomic(f"{nxt}/b{db}.npy", new)
+            _write_npy_atomic(f"{degd}/b{db}.npy", acc)
+            return (int((new != old).sum()),)
 
-    av, dv = f"{rdir}/alive{done}", f"{rdir}/deg{done}"
+        return map_blocks(work, kernel, "changed long")
 
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            out.append((
-                b, np.load(f"{av}/b{b}.npy"), np.load(f"{dv}/b{b}.npy")
-            ))
-        return pd.DataFrame(out, columns=["block", "av", "dv"])
-
+    done = len(run_steps(
+        rdir, step, 0, n_rounds, keep_steps, dirs=("alive", "deg"),
+        stop=lambda s: rounds is None and s[0] == 0,
+    ))
     out = truncate_plan(
-        g.block_meta.groupBy("block")
-        .applyInPandas(
-            read_kernel, "block int, av array<double>, dv array<double>"
-        )
-        .select(
-            "block", F.posexplode(F.arrays_zip("av", "dv")).alias("local", "z")
-        )
-        .select("block", "local", "z.av", "z.dv")
+        read_blocks(g, rdir, {"av": f"alive{done}/b", "dv": f"deg{done}/b"})
         .where(F.col("av") > 0)
-        .join(vmap_side(g), ["block", "local"])
         .select("id", F.col("dv").cast("long").alias("core_deg")),
         eager=False,
     )

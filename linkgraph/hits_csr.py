@@ -38,15 +38,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from . import native
 from .lineage import truncate_plan
-from .pagerank_csr import (
-    BlockedGraph,
-    _load_block,
-    _ranks_root,
+from .pagerank_csr import BlockedGraph, _load_block, _ranks_root, build_blocked
+from .supersteps import (
     _write_npy_atomic,
-    build_blocked,
-    vmap_side,
+    fill_blocks,
+    map_blocks,
+    read_blocks,
+    run_steps,
+    scatter_in,
+    work_index,
 )
 
 
@@ -79,7 +80,6 @@ def build_hits_stores(
 
 
 def _scatter_step(
-    spark,
     g: BlockedGraph,
     work: DataFrame,
     src_dir: str,
@@ -100,72 +100,26 @@ def _scatter_step(
     the write (Katz's beta + alpha·gather)."""
     store, token, n_blocks = g.store_path, g.build_token, g.n_blocks
 
-    def step_fn(batches):
-        dfs = [b for b in batches if len(b)]
-        if not dfs:
-            return
-        pdf = pd.concat(dfs, ignore_index=True)
-        rows = []
-        vec_cache: dict = {}
-        for db, dsize in zip(pdf["db"], pdf["dsize"]):
-            db, dsize = int(db), int(dsize)
-            acc = np.zeros(dsize, dtype=np.float64)
-            blk = _load_block(store, token, db, n_blocks)
-            offs = blk[1]
-            if src_norm > 0:
-                for sb in np.flatnonzero(np.diff(offs)):
-                    a, b_ = int(offs[sb]), int(offs[sb + 1])
-                    vs = vec_cache.get(sb)
-                    if vs is None:
-                        # normalization folded into the load: the same
-                        # per-element division the flat path performs
-                        vs = np.load(f"{src_dir}/b{sb}.npy") / src_norm
-                        if src_scale_dir is not None:
-                            vs = vs * np.load(f"{src_scale_dir}/b{sb}.npy")
-                        vec_cache[sb] = vs
-                    if blk[0] == "p":
-                        native.scatter_add_pack16(blk[2][a:b_], vs, acc)
-                    else:
-                        native.scatter_add32(
-                            blk[2][a:b_], blk[3][a:b_], vs, acc
-                        )
-            if post is not None:
-                acc = post[0] + post[1] * acc
-            os.makedirs(dst_dir, exist_ok=True)
-            _write_npy_atomic(f"{dst_dir}/b{db}.npy", acc)
-            rows.append((db, float(acc.sum())))
-        yield pd.DataFrame(rows, columns=["block", "part"])
+    def load(sb):
+        # normalization folded into the load: the same per-element
+        # division the flat path performs
+        vs = np.load(f"{src_dir}/b{sb}.npy") / src_norm
+        if src_scale_dir is not None:
+            vs = vs * np.load(f"{src_scale_dir}/b{sb}.npy")
+        return vs
 
-    row = (
-        work.mapInPandas(step_fn, "block int, part double")
-        .agg(F.sum("part").alias("s"))
-        .collect()[0]
-    )
-    return float(row["s"] or 0.0)
+    def kernel(db, dsize, cache):
+        acc = np.zeros(dsize, dtype=np.float64)
+        if src_norm > 0:
+            scatter_in(_load_block(store, token, db, n_blocks), cache, load,
+                       acc)
+        if post is not None:
+            acc = post[0] + post[1] * acc
+        os.makedirs(dst_dir, exist_ok=True)
+        _write_npy_atomic(f"{dst_dir}/b{db}.npy", acc)
+        return (float(acc.sum()),)
 
-
-def _work_of(g: BlockedGraph) -> DataFrame:
-    return truncate_plan(
-        g.block_meta.select(
-            F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
-    )
-
-
-def _write_const_blocks(g: BlockedGraph, out_dir: str, value: float) -> None:
-    """Per-block constant vector files from block sizes alone."""
-    def prep_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        os.makedirs(out_dir, exist_ok=True)
-        for b, size in zip(pdf["block"], pdf["size"]):
-            _write_npy_atomic(
-                f"{out_dir}/b{int(b)}.npy",
-                np.full(int(size), value, dtype=np.float64),
-            )
-        return pd.DataFrame({"block": [int(b) for b in pdf["block"]]})
-
-    g.block_meta.groupBy("block").applyInPandas(
-        prep_kernel, "block int"
-    ).count()
+    return float(map_blocks(work, kernel, "part double")[0] or 0.0)
 
 
 def _write_invdeg_blocks(g: BlockedGraph, out_dir: str,
@@ -210,95 +164,35 @@ def hits_blocked(
     os.makedirs(rdir, exist_ok=True)
     n = g_fwd.n
 
-    work_fwd, work_rev = _work_of(g_fwd), _work_of(g_rev)
+    work_fwd, work_rev = work_index(g_fwd), work_index(g_rev)
 
     # h0 = 1/n everywhere: derivable from block sizes alone, no shuffle
-    _write_const_blocks(g_fwd, f"{rdir}/h0", 1.0 / n)
+    fill_blocks(g_fwd, f"{rdir}/h0", 1.0 / n)
 
-    h_norm = 1.0  # h0 is already normalized
-    a_norm = 1.0
-    for t in range(iterations):
+    norms = [1.0, 1.0]  # (h, a); h0 is already normalized
+
+    def step(t, cur, nxt):
         # authority: a_raw = A^T (h / h_norm) — scatter over g_fwd
-        a_norm = _scatter_step(
-            spark, g_fwd, work_fwd,
-            f"{rdir}/h{t}", f"{rdir}/a{t + 1}", h_norm,
+        norms[1] = _scatter_step(
+            g_fwd, work_fwd, cur, f"{rdir}/a{t + 1}", norms[0]
         )
         # hub: h_raw = A (a / a_norm) — scatter over g_rev
-        h_norm = _scatter_step(
-            spark, g_rev, work_rev,
-            f"{rdir}/a{t + 1}", f"{rdir}/h{t + 1}", a_norm,
+        norms[0] = _scatter_step(
+            g_rev, work_rev, f"{rdir}/a{t + 1}", nxt, norms[1]
         )
-        stale = t - keep_steps + 1
-        if stale >= 0:
-            shutil.rmtree(f"{rdir}/h{stale}", ignore_errors=True)
-            shutil.rmtree(f"{rdir}/a{stale}", ignore_errors=True)
+        return tuple(norms)
 
-    ha, hn = f"{rdir}/a{iterations}", f"{rdir}/h{iterations}"
-    an_s, hn_s = a_norm, h_norm
-
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            a = np.load(f"{ha}/b{b}.npy")
-            h = np.load(f"{hn}/b{b}.npy")
-            out.append((
-                b,
-                (h / hn_s if hn_s > 0 else np.zeros_like(h)),
-                (a / an_s if an_s > 0 else np.zeros_like(a)),
-            ))
-        return pd.DataFrame(out, columns=["block", "hv", "av"])
-
-    scores = (
-        g_fwd.block_meta.groupBy("block")
-        .applyInPandas(
-            read_kernel, "block int, hv array<double>, av array<double>"
-        )
-        .select(
-            "block",
-            F.posexplode(F.arrays_zip("hv", "av")).alias("local", "z"),
-        )
-        .select("block", "local", "z.hv", "z.av")
-        .join(g_fwd.vmap, ["block", "local"])
-        .select(
-            "id", F.col("hv").alias("hub"), F.col("av").alias("authority")
-        )
-    )
+    run_steps(rdir, step, 0, iterations, keep_steps, dirs=("h", "a"))
+    # the final L1 normalization (norm <= 0: the flat spec's all-zero case)
+    last = {"hub": f"h{iterations}/b", "authority": f"a{iterations}/b"}
+    scores = read_blocks(g_fwd, rdir, last).select("id", *[
+        (F.col(c) / norm if norm > 0 else F.lit(0.0)).alias(c)
+        for c, norm in (("hub", norms[0]), ("authority", norms[1]))
+    ])
     out = truncate_plan(scores, eager=False)
     out.count()  # materialize before callers delete the stores
     shutil.rmtree(rdir, ignore_errors=True)
     return out
-
-
-def _read_scores(
-    g: BlockedGraph,
-    specs: "list[tuple[str, str, float]]",
-) -> DataFrame:
-    """(id, <name>...) from per-block vector files: specs are
-    (column_name, step_dir, divisor) — divisor <= 0 reads as zeros."""
-    names = [s[0] for s in specs]
-
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            row = [b]
-            for _name, d, div in specs:
-                v = np.load(f"{d}/b{b}.npy")
-                row.append(v / div if div > 0 else np.zeros_like(v))
-            out.append(tuple(row))
-        return pd.DataFrame(out, columns=["block"] + names)
-
-    schema = "block int, " + ", ".join(f"{n} array<double>" for n in names)
-    zipped = F.posexplode(F.arrays_zip(*names)).alias("local", "z")
-    return (
-        g.block_meta.groupBy("block")
-        .applyInPandas(read_kernel, schema)
-        .select("block", zipped)
-        .select("block", "local", *[F.col(f"z.{n}").alias(n) for n in names])
-        .join(vmap_side(g), ["block", "local"])
-        .select("id", *names)
-    )
 
 
 def katz_blocked(
@@ -317,20 +211,17 @@ def katz_blocked(
     edges — do not distinct)."""
     rdir = f"{_ranks_root(g_fwd)}/katz-{uuid.uuid4().hex[:12]}"
     os.makedirs(rdir, exist_ok=True)
-    work = _work_of(g_fwd)
-    _write_const_blocks(g_fwd, f"{rdir}/x0", float(beta))
-    for t in range(iterations):
-        _scatter_step(
-            spark, g_fwd, work, f"{rdir}/x{t}", f"{rdir}/x{t + 1}", 1.0,
-            post=(float(beta), float(alpha)),
-        )
-        stale = t - keep_steps + 1
-        if stale >= 0:
-            shutil.rmtree(f"{rdir}/x{stale}", ignore_errors=True)
-    out = truncate_plan(
-        _read_scores(
-            g_fwd, [("katz", f"{rdir}/x{iterations}", 1.0)]
+    work = work_index(g_fwd)
+    fill_blocks(g_fwd, f"{rdir}/x0", float(beta))
+    run_steps(
+        rdir,
+        lambda t, cur, nxt: _scatter_step(
+            g_fwd, work, cur, nxt, 1.0, post=(float(beta), float(alpha))
         ),
+        0, iterations, keep_steps, dirs=("x",),
+    )
+    out = truncate_plan(
+        read_blocks(g_fwd, f"{rdir}/x{iterations}", {"katz": "b"}),
         eager=False,
     )
     out.count()
@@ -358,7 +249,7 @@ def salsa_blocked(
         "fwd/rev stores must share the vertex layout (build_hits_stores)"
     rdir = f"{_ranks_root(g_fwd)}/salsa-{uuid.uuid4().hex[:12]}"
     os.makedirs(rdir, exist_ok=True)
-    work_fwd, work_rev = _work_of(g_fwd), _work_of(g_rev)
+    work_fwd, work_rev = work_index(g_fwd), work_index(g_rev)
 
     # scale sidecars: 1/od (authority step), 1/idg (hub step)
     _write_invdeg_blocks(g_fwd, f"{rdir}/iod")
@@ -375,27 +266,21 @@ def salsa_blocked(
         mask_value=(1.0 / n_hub) if n_hub else 0.0,
     )
 
-    for t in range(iterations):
+    def step(t, cur, nxt):
         _scatter_step(
-            spark, g_fwd, work_fwd,
-            f"{rdir}/h{t}", f"{rdir}/a{t + 1}", 1.0,
+            g_fwd, work_fwd, cur, f"{rdir}/a{t + 1}", 1.0,
             src_scale_dir=f"{rdir}/iod",
         )
-        _scatter_step(
-            spark, g_rev, work_rev,
-            f"{rdir}/a{t + 1}", f"{rdir}/h{t + 1}", 1.0,
+        return (_scatter_step(
+            g_rev, work_rev, f"{rdir}/a{t + 1}", nxt, 1.0,
             src_scale_dir=f"{rdir}/iidg",
-        )
-        stale = t - keep_steps + 1
-        if stale >= 0:
-            shutil.rmtree(f"{rdir}/h{stale}", ignore_errors=True)
-            shutil.rmtree(f"{rdir}/a{stale}", ignore_errors=True)
+        ),)
 
+    run_steps(rdir, step, 0, iterations, keep_steps, dirs=("h", "a"))
     out = truncate_plan(
-        _read_scores(
-            g_fwd,
-            [("hub", f"{rdir}/h{iterations}", 1.0),
-             ("authority", f"{rdir}/a{iterations}", 1.0)],
+        read_blocks(
+            g_fwd, rdir,
+            {"hub": f"h{iterations}/b", "authority": f"a{iterations}/b"},
         ),
         eager=False,
     )

@@ -43,7 +43,6 @@ face of its per-component structure analysis.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 import uuid
 
@@ -54,12 +53,15 @@ from pyspark.sql import DataFrame, Window, functions as F
 from . import native
 from .caching import register_cache
 from .lineage import truncate_plan
-from .pagerank_csr import (
-    BlockedGraph,
-    _load_block,
-    _ranks_root,
+from .pagerank_csr import BlockedGraph, _load_block, _ranks_root
+from .supersteps import (
     _write_npy_atomic,
-    vmap_side,
+    completed_steps,
+    gather_in,
+    map_blocks,
+    read_blocks,
+    run_steps,
+    work_index,
 )
 
 
@@ -73,12 +75,19 @@ def id_ranks(ids: DataFrame, num_partitions: int | None = None) -> DataFrame:
     stable between the count job and the rank job; the caller releases it
     via caching.release_caches() after materializing downstream frames.
     """
-    spark = ids.sparkSession
+    return _dense_ranks(ids.select("id"), "id", num_partitions)
+
+
+def _dense_ranks(df: DataFrame, key: str,
+                 num_partitions: int | None) -> DataFrame:
+    """df(id, key) -> (id, rank): dense 0..n-1 rank in ascending ``key``
+    order, by the scale-out shape ``id_ranks`` documents (also
+    mis_csr.priority_ranks)."""
+    spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     tagged = register_cache(
-        ids.select("id")
-        .repartitionByRange(num_partitions, "id")
+        df.repartitionByRange(num_partitions, key)
         .withColumn("pid", F.spark_partition_id())
         .persist()
     )
@@ -91,24 +100,32 @@ def id_ranks(ids: DataFrame, num_partitions: int | None = None) -> DataFrame:
         rows.append((p, acc))
         acc += counts[p]
     offs = spark.createDataFrame(rows or [(0, 0)], "pid int, off long")
-    w = Window.partitionBy("pid").orderBy("id")
+    w = Window.partitionBy("pid").orderBy(key)
     return tagged.join(F.broadcast(offs), "pid").select(
         "id", (F.row_number().over(w) - 1 + F.col("off")).alias("rank")
     )
 
 
-def _lp_completed(rdir: str) -> list[np.ndarray]:
-    """Contiguous prefix of per-step (changed, kernel_secs) marker files —
-    ``part/g<k>.npy`` is written by the driver AFTER superstep k's
-    aggregation returns, so its presence proves every block's step-k+1
-    label file landed (atomic per-block writes happen-before the agg).
-    The prefix length is exactly the resumable position."""
-    out = []
-    k = 0
-    while os.path.exists(f"{rdir}/part/g{k}.npy"):
-        out.append(np.load(f"{rdir}/part/g{k}.npy"))
-        k += 1
-    return out
+def _vote_stats(stats: dict | None, done: list, ran: list, last: str,
+                rdir: str) -> None:
+    """Fill ``stats`` for a marker-resumable vote run (this module and
+    community_csr): ``done`` are the resumed steps' (changed, kernel)
+    marker records, ``ran`` the ``run_steps`` result of this call."""
+    if stats is None:
+        return
+    sums = [(d[0], d[1]) for d in done] + [s for s, _ in ran]
+    # resumed steps: no wall
+    stats["step_secs"] = [0.0] * len(done) + [round(t, 3) for _, t in ran]
+    # summed in-task block work (load + gather + vote + write) per
+    # superstep: wall - kernel/slots ≈ scheduling/coordination, the
+    # split the scaling-gate hygiene note reads
+    stats["kernel_secs"] = [round(float(k), 3) for _, k in sums]
+    stats["steps"] = len(sums)
+    stats["changed"] = [int(c) for c, _ in sums]
+    # benches checksum the final rank-space label files directly (this
+    # host shares the transport dir) instead of paying the id decode
+    stats["final_dir"] = last
+    stats["run_dir"] = rdir
 
 
 def label_propagation_blocked(
@@ -131,14 +148,15 @@ def label_propagation_blocked(
 
     ``run_dir`` names the run's checkpoint directory; a killed run handed
     the same ``run_dir`` RESUMES after its last completed superstep
-    (marker contract of ``_lp_completed``; a partially-written next step
-    is simply recomputed — per-block files are atomic same-bytes
-    rewrites). Resumed supersteps report ``step_secs`` 0.0 and their
-    recorded ``changed`` counts, the PageRank resume convention."""
+    (marker contract of ``supersteps.completed_steps``; a partially
+    written next step is simply recomputed — per-block files are atomic
+    same-bytes rewrites). Resumed supersteps report ``step_secs`` 0.0
+    and their recorded ``changed`` counts, the PageRank resume
+    convention."""
     n_blocks, store, token = g.n_blocks, g.store_path, g.build_token
     rdir = run_dir or f"{_ranks_root(g)}/lp-{uuid.uuid4().hex[:12]}"
     os.makedirs(f"{rdir}/part", exist_ok=True)
-    done = _lp_completed(rdir) if run_dir else []
+    done = completed_steps(rdir) if run_dir else []
     start = len(done)
     if start > iterations:
         raise ValueError(
@@ -171,113 +189,35 @@ def label_propagation_blocked(
             .count()
         )
 
-    work = truncate_plan(
-        g.block_meta.select(
-            F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
-    )
+    work = work_index(g)
 
-    step_secs: list[float] = [0.0] * start  # resumed steps: no wall
-    kernel_secs: list[float] = [float(d[1]) for d in done]
-    changed_per_step: list[int] = [int(d[0]) for d in done]
-    for step in range(start, iterations):
-        t_step = time.perf_counter()
-        cur, nxt = f"{rdir}/step{step}", f"{rdir}/step{step + 1}"
+    def step(k, cur, nxt):
+        def kernel(db, dsize, cache):
+            t_k = time.perf_counter()
+            old = np.load(f"{cur}/b{db}.npy")
+            acc = old.copy()
+            # full load (not mmap): gather kernels need a contiguous
+            # array; label files are V/B doubles
+            lab, dl = gather_in(
+                _load_block(store, token, db, n_blocks), cache,
+                lambda sb: np.load(f"{cur}/b{sb}.npy"),
+            )
+            if len(lab):
+                native.modal_vote(dl, lab, acc)
+            os.makedirs(nxt, exist_ok=True)
+            _write_npy_atomic(f"{nxt}/b{db}.npy", acc)
+            return int((acc != old).sum()), time.perf_counter() - t_k
 
-        def make_step_fn(_cur, _nxt):
-            def step_fn(batches):
-                dfs = [b for b in batches if len(b)]
-                if not dfs:
-                    return
-                pdf = pd.concat(dfs, ignore_index=True)
-                rows = []
-                lbl_cache: dict = {}
-                for db, dsize in zip(pdf["db"], pdf["dsize"]):
-                    db = int(db)
-                    t_k = time.perf_counter()
-                    old = np.load(f"{_cur}/b{db}.npy")
-                    acc = old.copy()
-                    blk = _load_block(store, token, db, n_blocks)
-                    offs = blk[1]
-                    labs, dls = [], []
-                    for sb in np.flatnonzero(np.diff(offs)):
-                        a, b_ = int(offs[sb]), int(offs[sb + 1])
-                        ls = lbl_cache.get(sb)
-                        if ls is None:
-                            # full load (not mmap): gather kernels need a
-                            # contiguous array; label files are V/B doubles
-                            ls = np.load(f"{_cur}/b{sb}.npy")
-                            lbl_cache[sb] = ls
-                        if blk[0] == "p":
-                            lab, dl = native.gather_labels_pack16(
-                                blk[2][a:b_], ls
-                            )
-                        else:
-                            lab = native.gather_labels32(blk[2][a:b_], ls)
-                            dl = np.ascontiguousarray(
-                                blk[3][a:b_], dtype=np.int32
-                            )
-                        labs.append(lab)
-                        dls.append(dl)
-                    if labs:
-                        native.modal_vote(
-                            np.concatenate(dls), np.concatenate(labs), acc
-                        )
-                    changed = int((acc != old).sum())
-                    os.makedirs(_nxt, exist_ok=True)
-                    _write_npy_atomic(f"{_nxt}/b{db}.npy", acc)
-                    rows.append((db, changed, time.perf_counter() - t_k))
-                yield pd.DataFrame(rows,
-                                   columns=["block", "changed", "kern"])
+        return map_blocks(work, kernel, "changed long, kern double")
 
-            return step_fn
-
-        agg = (
-            work.mapInPandas(make_step_fn(cur, nxt),
-                             "block int, changed long, kern double")
-            .agg(F.sum("changed").alias("c"), F.sum("kern").alias("k"))
-            .collect()[0]
-        )
-        changed = int(agg["c"])
-        kernel_secs.append(float(agg["k"]))
-        step_secs.append(time.perf_counter() - t_step)
-        changed_per_step.append(changed)
-        # completion marker AFTER the agg (resume contract, and it
-        # restores this step's changed/kernel stats on resume)
-        _write_npy_atomic(
-            f"{rdir}/part/g{step}.npy",
-            np.array([changed, float(agg["k"])], dtype=np.float64),
-        )
-        stale = step - keep_steps + 1
-        if stale >= 0:
-            shutil.rmtree(f"{rdir}/step{stale}", ignore_errors=True)
+    # completion marker AFTER the agg (resume contract, and it restores
+    # this step's changed/kernel stats on resume)
+    ran = run_steps(rdir, step, start, iterations, keep_steps, marker=True)
     last = f"{rdir}/step{iterations}"
-    if stats is not None:
-        stats["step_secs"] = [round(s, 3) for s in step_secs]
-        # summed in-task block work (load + gather + vote + write) per
-        # superstep: wall - kernel/slots ≈ scheduling/coordination, the
-        # split the scaling-gate hygiene note reads
-        stats["kernel_secs"] = [round(s, 3) for s in kernel_secs]
-        stats["steps"] = iterations
-        stats["changed"] = changed_per_step
-        # benches checksum the final rank-space label files directly (this
-        # host shares the transport dir) instead of paying the id decode
-        stats["final_dir"] = last
-        stats["run_dir"] = rdir
+    _vote_stats(stats, done, ran, last, rdir)
 
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            out.append((b, np.load(f"{last}/b{b}.npy")))
-        return pd.DataFrame(out, columns=["block", "lv"])
-
-    final = (
-        g.block_meta.groupBy("block")
-        .applyInPandas(read_kernel, "block int, lv array<double>")
-        .select("block", F.posexplode("lv").alias("local", "flabel"))
-        .join(vmap_side(g), ["block", "local"])
-        .select("id", F.col("flabel").cast("long").alias("flabel"))
+    final = read_blocks(g, last, {"flabel": "b"}).select(
+        "id", F.col("flabel").cast("long").alias("flabel")
     )
     # rank -> owning vertex id: the inverse of the init mapping, one join
     owner = ranks.select(

@@ -53,22 +53,23 @@ from __future__ import annotations
 import logging
 import os
 import shutil
-import time
 import uuid
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from . import native
 from .caching import register_cache
+from .labelprop_csr import _dense_ranks
 from .lineage import truncate_plan
-from .pagerank_csr import (
-    BlockedGraph,
-    _load_block,
-    _ranks_root,
+from .pagerank_csr import BlockedGraph, _load_block, _ranks_root
+from .supersteps import (
     _write_npy_atomic,
-    vmap_side,
+    map_blocks,
+    read_blocks,
+    run_steps,
+    scatter_in,
+    work_index,
 )
 
 log = logging.getLogger(__name__)
@@ -81,32 +82,9 @@ def priority_ranks(
     ``md5(id) || '-' || id`` string order — the flat MIS priority
     (mis.py:_priority), reindexed to a float64-exact total order.
     Same scale-out shape as labelprop_csr.id_ranks."""
-    spark = ids.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     id_str = F.col("id").cast("string")
-    tagged = register_cache(
-        ids.select(
-            "id",
-            F.concat(F.md5(id_str), F.lit("-"), id_str).alias("pri"),
-        )
-        .repartitionByRange(num_partitions, "pri")
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = {
-        int(r["pid"]): int(r["c"])
-        for r in tagged.groupBy("pid").agg(F.count("*").alias("c")).collect()
-    }
-    rows, acc = [], 0
-    for p in sorted(counts):
-        rows.append((p, acc))
-        acc += counts[p]
-    offs = spark.createDataFrame(rows or [(0, 0)], "pid int, off long")
-    w = Window.partitionBy("pid").orderBy("pri")
-    return tagged.join(F.broadcast(offs), "pid").select(
-        "id", (F.row_number().over(w) - 1 + F.col("off")).alias("rank")
-    )
+    pri = F.concat(F.md5(id_str), F.lit("-"), id_str).alias("pri")
+    return _dense_ranks(ids.select("id", pri), "pri", num_partitions)
 
 
 def mis_blocked(
@@ -155,172 +133,85 @@ def mis_blocked(
         .count()
     )
 
-    work = truncate_plan(
-        g.block_meta.select(
-            F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
-    )
-
-    bounded = rounds is not None
-    step_secs: list[float] = []
-    winners_per: list[int] = []
+    work = work_index(g)
     und_per: list[int] = []
-    prev_und = None
-    k = 0
-    while True:
-        if bounded and k >= rounds:
-            break
-        cur = f"{rdir}/step{k}"
-        t_step = time.perf_counter()
 
+    def step(k, cur, nxt):
         # win job: nbr-min of undecided priorities -> 0/1 winner vectors
         wdir = f"{rdir}/win{k}"
 
-        def make_win_fn(_cur, _wdir):
-            def win_fn(batches):
-                dfs = [b for b in batches if len(b)]
-                if not dfs:
-                    return
-                pdf = pd.concat(dfs, ignore_index=True)
-                rows = []
-                eff_cache: dict = {}
-                for db, dsize in zip(pdf["db"], pdf["dsize"]):
-                    db = int(db)
-                    s = np.load(f"{_cur}/b{db}.npy")
-                    p = np.load(f"{rdir}/prio/b{db}.npy")
-                    acc = np.full(int(dsize), np.inf)
-                    blk = _load_block(store, token, db, n_blocks)
-                    offs = blk[1]
-                    for sb in np.flatnonzero(np.diff(offs)):
-                        a, b_ = int(offs[sb]), int(offs[sb + 1])
-                        eff = eff_cache.get(sb)
-                        if eff is None:
-                            ss = np.load(f"{_cur}/b{sb}.npy")
-                            pp = np.load(f"{rdir}/prio/b{sb}.npy")
-                            eff = np.where(ss == 0.0, pp, np.inf)
-                            eff_cache[sb] = eff
-                        if blk[0] == "p":
-                            native.scatter_min_pack16(blk[2][a:b_], eff, acc)
-                        else:
-                            native.scatter_min32(
-                                blk[2][a:b_], blk[3][a:b_], eff, acc
-                            )
-                    win = (s == 0.0) & (p < acc)
-                    os.makedirs(_wdir, exist_ok=True)
-                    _write_npy_atomic(
-                        f"{_wdir}/b{db}.npy", win.astype(np.float64)
-                    )
-                    rows.append((db, int(win.sum())))
-                yield pd.DataFrame(rows, columns=["block", "w"])
+        def win_kernel(db, dsize, cache):
+            def eff_of(sb):
+                ss = np.load(f"{cur}/b{sb}.npy")
+                pp = np.load(f"{rdir}/prio/b{sb}.npy")
+                return np.where(ss == 0.0, pp, np.inf)
 
-            return win_fn
+            s = np.load(f"{cur}/b{db}.npy")
+            p = np.load(f"{rdir}/prio/b{db}.npy")
+            acc = scatter_in(
+                _load_block(store, token, db, n_blocks), cache, eff_of,
+                np.full(dsize, np.inf), op="min",
+            )
+            win = (s == 0.0) & (p < acc)
+            os.makedirs(wdir, exist_ok=True)
+            _write_npy_atomic(f"{wdir}/b{db}.npy", win.astype(np.float64))
+            return (int(win.sum()),)
 
-        n_win = int(
-            work.mapInPandas(make_win_fn(cur, wdir), "block int, w long")
-            .agg(F.sum("w").alias("w"))
-            .collect()[0]["w"]
-        )
+        n_win = map_blocks(work, win_kernel, "w long")[0]
 
         # eliminate job: finite min over winner-indicator sources => an
         # undecided neighbor of a winner -> 'out'; winners -> 'in'
-        nxt = f"{rdir}/step{k + 1}"
-
-        def make_elim_fn(_cur, _wdir, _nxt):
-            def elim_fn(batches):
-                dfs = [b for b in batches if len(b)]
-                if not dfs:
-                    return
-                pdf = pd.concat(dfs, ignore_index=True)
-                rows = []
-                eff_cache: dict = {}
-                for db, dsize in zip(pdf["db"], pdf["dsize"]):
-                    db = int(db)
-                    s = np.load(f"{_cur}/b{db}.npy")
-                    win = np.load(f"{_wdir}/b{db}.npy")
-                    acc = np.full(int(dsize), np.inf)
-                    blk = _load_block(store, token, db, n_blocks)
-                    offs = blk[1]
-                    for sb in np.flatnonzero(np.diff(offs)):
-                        a, b_ = int(offs[sb]), int(offs[sb + 1])
-                        eff = eff_cache.get(sb)
-                        if eff is None:
-                            ww = np.load(f"{_wdir}/b{sb}.npy")
-                            eff = np.where(ww == 1.0, 0.0, np.inf)
-                            eff_cache[sb] = eff
-                        if blk[0] == "p":
-                            native.scatter_min_pack16(blk[2][a:b_], eff, acc)
-                        else:
-                            native.scatter_min32(
-                                blk[2][a:b_], blk[3][a:b_], eff, acc
-                            )
-                    ns = s.copy()
-                    ns[win == 1.0] = 1.0
-                    ns[(acc < np.inf) & (s == 0.0) & (win == 0.0)] = 2.0
-                    os.makedirs(_nxt, exist_ok=True)
-                    _write_npy_atomic(f"{_nxt}/b{db}.npy", ns)
-                    rows.append((db, int((ns == 0.0).sum())))
-                yield pd.DataFrame(rows, columns=["block", "u"])
-
-            return elim_fn
-
-        n_und = int(
-            work.mapInPandas(
-                make_elim_fn(cur, wdir, nxt), "block int, u long"
+        def elim_kernel(db, dsize, cache):
+            s = np.load(f"{cur}/b{db}.npy")
+            win = np.load(f"{wdir}/b{db}.npy")
+            acc = scatter_in(
+                _load_block(store, token, db, n_blocks), cache,
+                lambda sb: np.where(
+                    np.load(f"{wdir}/b{sb}.npy") == 1.0, 0.0, np.inf
+                ),
+                np.full(dsize, np.inf), op="min",
             )
-            .agg(F.sum("u").alias("u"))
-            .collect()[0]["u"]
-        )
-        step_secs.append(time.perf_counter() - t_step)
-        winners_per.append(n_win)
-        und_per.append(n_und)
+            ns = s.copy()
+            ns[win == 1.0] = 1.0
+            ns[(acc < np.inf) & (s == 0.0) & (win == 0.0)] = 2.0
+            os.makedirs(nxt, exist_ok=True)
+            _write_npy_atomic(f"{nxt}/b{db}.npy", ns)
+            return (int((ns == 0.0).sum()),)
+
+        n_und = map_blocks(work, elim_kernel, "u long")[0]
         shutil.rmtree(wdir, ignore_errors=True)
-        stale = k - keep_steps + 1
-        if stale >= 0:
-            shutil.rmtree(f"{rdir}/step{stale}", ignore_errors=True)
-        k += 1
-        if not bounded:
+        if rounds is None and n_und:
             # mis.py's fixpoint discipline: run to emptiness, guard
             # progress, warn past max_iter
-            if n_und == 0:
-                break
-            if prev_und is not None and n_und >= prev_und:
+            if und_per and n_und >= und_per[-1]:
                 raise RuntimeError(
-                    f"mis_blocked: round {k} left {n_und} >= {prev_und} "
-                    "undecided vertices — no progress; winner election "
-                    "is broken"
+                    f"mis_blocked: round {k + 1} left {n_und} >= "
+                    f"{und_per[-1]} undecided vertices — no progress; "
+                    "winner election is broken"
                 )
-            prev_und = n_und
-            if k >= max_iter:
+            if k + 1 >= max_iter:
                 log.warning(
                     "mis_blocked: fixpoint still has %d undecided "
                     "vertices after %d rounds (> max_iter=%d); "
-                    "continuing to emptiness", n_und, k, max_iter,
+                    "continuing to emptiness", n_und, k + 1, max_iter,
                 )
+        und_per.append(n_und)
+        return n_win, n_und
+
+    done = run_steps(
+        rdir, step, 0, rounds, keep_steps,
+        stop=lambda sums: rounds is None and sums[1] == 0,
+    )
     if stats is not None:
-        stats["step_secs"] = [round(s, 3) for s in step_secs]
-        stats["steps"] = k
-        stats["winners"] = winners_per
+        stats["step_secs"] = [round(secs, 3) for _, secs in done]
+        stats["steps"] = len(done)
+        stats["winners"] = [int(sums[0]) for sums, _ in done]
         stats["undecided"] = und_per
 
-    last = f"{rdir}/step{k}"
-
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            out.append((b, np.load(f"{last}/b{b}.npy")))
-        return pd.DataFrame(out, columns=["block", "sv"])
-
-    return (
-        g.block_meta.groupBy("block")
-        .applyInPandas(read_kernel, "block int, sv array<double>")
-        .select("block", F.posexplode("sv").alias("local", "sv"))
-        .join(vmap_side(g), ["block", "local"])
-        .select(
-            "id",
-            F.when(F.col("sv") == 1.0, F.lit("in"))
-            .when(F.col("sv") == 2.0, F.lit("out"))
-            .otherwise(F.lit("und"))
-            .alias("state"),
-        )
+    return read_blocks(g, f"{rdir}/step{len(done)}", {"sv": "b"}).select(
+        "id",
+        F.when(F.col("sv") == 1.0, F.lit("in"))
+        .when(F.col("sv") == 2.0, F.lit("out"))
+        .otherwise(F.lit("und"))
+        .alias("state"),
     )

@@ -30,14 +30,20 @@ per-partition CSR blocks, PageRank run *on that layout*): the classic
   destination block and returns only (block, l1, dm) scalars. NOTHING
   fat ever crosses the Arrow boundary or a shuffle — per-superstep Spark
   traffic is O(B) rows of scalars, no lineage growth, no localCheckpoint.
+  The jobs-transport machinery (work index, per-block map job, step
+  loop, resume markers, decode) is the shared runtime in
+  linkgraph.supersteps, which every blocked operator runs on.
 - ``transport="barrier"`` additionally runs ALL supersteps inside ONE
-  Spark barrier-execution job (BarrierTaskContext): each slot owns a
-  static set of destination blocks, supersteps synchronize with
-  ``ctx.barrier()``, and per-superstep cost contains zero job-scheduling
-  overhead. With the native kernel a superstep is a few hundred ms, so
-  per-job overhead would otherwise dominate — exactly the regime barrier
-  mode exists for (MPI-style iterative ML). The per-step checkpoint
-  files are still written, so a killed run resumes mid-iteration.
+  Spark barrier-execution job (BarrierTaskContext): slots claim
+  destination blocks per superstep through atomic claim files, and
+  supersteps synchronize through a FILE rendezvous on the rank store
+  (per-slot partial files, a global per-step file from slot 0), not
+  ``ctx.barrier()``, which costs ~1 s per call. Per-superstep cost
+  contains zero job-scheduling overhead. With the native kernel a
+  superstep is a few hundred ms, so per-job overhead would otherwise
+  dominate — exactly the regime barrier mode exists for (MPI-style
+  iterative ML). The per-step checkpoint files are still written, so a
+  killed run resumes mid-iteration.
 
 Edge arrays are decoded from the Parquet block store ONCE per host into
 raw .npy sidecars and then memory-mapped by every worker (shared
@@ -81,10 +87,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .checkpoint import StepTimer
 from .lineage import truncate_plan
-from . import native
 from .pagerank import PageRankResult, SuperstepInfo
+from .supersteps import (
+    _write_npy_atomic,
+    completed_steps,
+    map_blocks,
+    read_blocks,
+    run_steps,
+    scatter_in,
+    vmap_side,  # noqa: F401  (public name; lives in supersteps)
+    work_index,
+)
 
 # worker-global LRU of OPEN MEMMAP HANDLES: (build_token, db, sb) ->
 # ("p", e) packed-u32 or ("w", sl, dl) int32 memmaps over the shared .npy
@@ -96,15 +110,6 @@ from .pagerank import PageRankResult, SuperstepInfo
 _EDGE_CACHE: "OrderedDict[tuple, tuple]" = OrderedDict()
 
 STORE_FORMAT = 2  # bump when the store/sidecar layout changes
-
-
-def vmap_side(g: "BlockedGraph") -> DataFrame:
-    """The vertex-map side of a decode/seed join: broadcast when |V|
-    (store metadata — no counting job) fits the broadcast cap; the plain
-    frame otherwise (guide §3.1)."""
-    from .joinhints import fits_broadcast
-
-    return F.broadcast(g.vmap) if fits_broadcast(g.n) else g.vmap
 
 
 def _cache_max_entries() -> int:
@@ -179,6 +184,11 @@ def build_blocked(
     intra-host links never leave the diagonal pair). All heavy lifting is
     JVM-side (joins + one write); no Python touches the |E| rows here,
     and no O(V) state is ever collected to the driver.
+
+    Edges with an endpoint outside ``vertices`` are DROPPED: the
+    coordinate joins keep only mapped endpoints, so such edges are
+    neither stored nor counted in any out-degree (``sum_od``, dangling
+    set). The edge input is read exactly once, so this is not checked.
     """
     if n_blocks is None:
         n_blocks = 2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -794,13 +804,6 @@ def _npy_cache_dir(store_path: str, token: str) -> str:
         return d
 
 
-def _write_npy_atomic(path: str, arr: np.ndarray) -> None:
-    tmp = f"{path}.{os.getpid()}.tmp"
-    with open(tmp, "wb") as f:
-        np.save(f, arr)
-    os.replace(tmp, path)  # atomic; retried/speculative tasks are idempotent
-
-
 def _load_block(store_path: str, token: str, db: int, n_blocks: int):
     """Worker-side edges for one destination block:
     ("p", offs, e_u32) packed or ("w", offs, sl_i32, dl_i32) wide, where
@@ -901,20 +904,29 @@ def _superstep_db(
     shares this kernel instead of copying it). ``None`` = plain path,
     bit-identical to the historical kernel.
     """
-    acc = np.zeros(dsize)
-    blk = _load_block(store, token, db, n_blocks)
-    offs = blk[1]
-    for sb in np.flatnonzero(np.diff(offs)):
-        a, b = int(offs[sb]), int(offs[sb + 1])
-        rs = rs_cache.get(sb) if rs_cache is not None else None
-        if rs is None:
-            rs = np.load(f"{cur}/s{sb}.npy", mmap_mode="r")
-            if rs_cache is not None:
-                rs_cache[sb] = rs
-        if blk[0] == "p":
-            native.scatter_add_pack16(blk[2][a:b], rs, acc)
-        else:
-            native.scatter_add32(blk[2][a:b], blk[3][a:b], rs, acc)
+    acc = scatter_in(
+        _load_block(store, token, db, n_blocks),
+        {} if rs_cache is None else rs_cache,
+        lambda sb: np.load(f"{cur}/s{sb}.npy", mmap_mode="r"),
+        np.zeros(dsize),
+    )
+    return _apply_ranks(rdir, db, acc, cur, nxt, base, damping, tp_dm)
+
+
+def _apply_ranks(
+    rdir: str,
+    db: int,
+    acc: np.ndarray,
+    cur: str,
+    nxt: str,
+    base: float,
+    damping: float,
+    tp_dm: tuple[str, float] | None = None,
+) -> tuple[float, float]:
+    """Apply step of one destination block from its gathered ``acc``:
+    the next rank vector, its L1 change and dangling mass; writes the
+    next raw + pre-scaled (``rank * inv``) rank files -> (l1, dm).
+    Shared by every PageRank variant (plain, personalized, weighted)."""
     if tp_dm is not None:
         tp_dir, dm = tp_dm
         tp = np.load(f"{tp_dir}/b{db}.npy", mmap_mode="r")
@@ -930,6 +942,23 @@ def _superstep_db(
     _write_npy_atomic(f"{nxt}/b{db}.npy", new)
     _write_npy_atomic(f"{nxt}/s{db}.npy", new * inv)
     return l1, dm
+
+
+def _prep_block(rdir: str, b: int, deg: np.ndarray, r0: np.ndarray):
+    """Step-0 files of block ``b`` from its out-degrees (or weighted
+    out-strengths) ``deg``: the static 1/deg vector, the dangling locals
+    (deg 0), and the raw + pre-scaled step-0 ranks ``r0``. Shared by
+    every PageRank variant's prep -> the dangling locals."""
+    for d in ("step0", "dangling", "static"):
+        os.makedirs(f"{rdir}/{d}", exist_ok=True)
+    with np.errstate(divide="ignore"):
+        inv = np.where(deg > 0, 1.0 / deg, 0.0)
+    _write_npy_atomic(f"{rdir}/static/inv{b}.npy", inv)
+    dang = np.flatnonzero(deg <= 0)
+    _write_npy_atomic(f"{rdir}/dangling/b{b}.npy", dang)
+    _write_npy_atomic(f"{rdir}/step0/b{b}.npy", r0)
+    _write_npy_atomic(f"{rdir}/step0/s{b}.npy", r0 * inv)
+    return dang
 
 
 def _prep_run(
@@ -986,27 +1015,18 @@ def _prep_run(
         )
 
     def prep_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        for d in ("step0", "dangling", "static"):
-            os.makedirs(f"{rdir}/{d}", exist_ok=True)
         out = []
         for b, size, od, il, iv in zip(
             pdf["block"], pdf["size"], pdf["od"], pdf["init_l"], pdf["init_v"]
         ):
-            b = int(b)
-            od_arr = np.asarray(od, dtype=np.int64)
-            with np.errstate(divide="ignore"):
-                inv = np.where(od_arr > 0, 1.0 / od_arr, 0.0)
-            _write_npy_atomic(f"{rdir}/static/inv{b}.npy", inv)
-            dang = np.flatnonzero(od_arr == 0)
-            _write_npy_atomic(f"{rdir}/dangling/b{b}.npy", dang)
             r0 = np.full(int(size), 1.0 / n)
             if il is not None and len(il):
                 r0[np.asarray(il, dtype=np.int64)] = np.asarray(
                     iv, dtype=np.float64
                 )
-            _write_npy_atomic(f"{rdir}/step0/b{b}.npy", r0)
-            _write_npy_atomic(f"{rdir}/step0/s{b}.npy", r0 * inv)
-            out.append((b, float(r0[dang].sum()) if len(dang) else 0.0))
+            od = np.asarray(od, dtype=np.int64)
+            dang = _prep_block(rdir, int(b), od, r0)
+            out.append((int(b), float(r0[dang].sum()) if len(dang) else 0.0))
         return pd.DataFrame(out, columns=["block", "dm"])
 
     dm = (
@@ -1045,16 +1065,19 @@ def _clear_stale_steps(rdir: str, start_step: int) -> None:
                     pass
 
 
-def _completed_steps(rdir: str) -> list[np.ndarray]:
-    """Contiguous prefix of per-step global (l1, dm) records in ``rdir`` —
-    ``part/g<k>.npy`` exists iff every slot finished superstep k, so the
-    prefix length is exactly the resumable position."""
-    out = []
-    k = 0
-    while os.path.exists(f"{rdir}/part/g{k}.npy"):
-        out.append(np.load(f"{rdir}/part/g{k}.npy"))
-        k += 1
-    return out
+def _prior_info(g: BlockedGraph, prior: list) -> list[SuperstepInfo]:
+    """Resumed supersteps re-enter the result with seconds=0.0; step 0's
+    incoming dangling mass is the uniform start's n_dangling/n, later
+    steps carry the recorded post-step mass forward."""
+    return [
+        SuperstepInfo(
+            k,
+            float(rec[0]),
+            g.n_dangling / g.n if k == 0 else float(prior[k - 1][1]),
+            0.0,
+        )
+        for k, rec in enumerate(prior)
+    ]
 
 
 def pagerank_blocked(
@@ -1094,7 +1117,7 @@ def pagerank_blocked(
     """
     rdir = run_dir or f"{_ranks_root(g)}/{uuid.uuid4().hex[:12]}"
     os.makedirs(f"{rdir}/part", exist_ok=True)
-    prior = _completed_steps(rdir)
+    prior = completed_steps(rdir)
     start_step = len(prior)
     warm_dm = None
     if start_step == 0:
@@ -1103,15 +1126,7 @@ def pagerank_blocked(
         # where the delta reached, so convergence needs far fewer
         # supersteps than from uniform 1/n (tested)
         warm_dm = _prep_run(g, rdir, init_ranks=init_ranks)
-    prior_info = [
-        SuperstepInfo(
-            k,
-            float(rec[0]),
-            (g.n_dangling / g.n if k == 0 else float(prior[k - 1][1])),
-            0.0,
-        )
-        for k, rec in enumerate(prior)
-    ]
+    prior_info = _prior_info(g, prior)
     dangling0 = (
         float(prior[-1][1])
         if prior
@@ -1127,9 +1142,20 @@ def pagerank_blocked(
             barrier_slots, start_step, dangling0,
         )
     elif transport == "jobs":
+        _clear_stale_steps(rdir, start_step)  # e.g. a killed barrier run
+        n, store, token = g.n, g.store_path, g.build_token
+        n_blocks = g.n_blocks
+
+        def db_step(db, dsize, cur, nxt, dm, cache):
+            base = (1.0 - damping) / n + damping * dm / n
+            return _superstep_db(
+                store, token, rdir, db, dsize, n_blocks, cur, nxt, base,
+                damping, cache,
+            )
+
         supersteps, converged = _run_jobs(
-            spark, g, rdir, damping, tol, max_iter, keep_steps,
-            start_step, dangling0,
+            g, rdir, tol, max_iter, keep_steps, start_step, dangling0,
+            db_step,
         )
     else:
         raise ValueError(f"unknown transport {transport!r}")
@@ -1137,106 +1163,43 @@ def pagerank_blocked(
     if supersteps and supersteps[-1].l1_delta < tol:
         converged = True
 
-    last = f"{rdir}/step{len(supersteps)}"
-
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            rv = np.load(f"{last}/b{b}.npy")
-            out.append((b, rv))
-        return pd.DataFrame(out, columns=["block", "rv"])
-
-    ranks_blocks = g.block_meta.groupBy("block").applyInPandas(
-        read_kernel, "block int, rv array<double>"
-    )
-    from .joinhints import fits_broadcast
-
-    vm = F.broadcast(g.vmap) if fits_broadcast(g.n) else g.vmap
-    flat = (
-        ranks_blocks.select("block", F.posexplode("rv").alias("local", "rank"))
-        .join(vm, ["block", "local"])
-        .select("id", "rank")
-    )
+    flat = read_blocks(g, f"{rdir}/step{len(supersteps)}", {"rank": "b"})
     return PageRankResult(flat, len(supersteps), converged, supersteps)
 
 
 def _run_jobs(
-    spark, g: BlockedGraph, rdir: str, damping, tol, max_iter, keep_steps,
-    start_step: int = 0, dangling0: float | None = None,
+    g: BlockedGraph, rdir: str, tol, max_iter, keep_steps, start_step,
+    dangling0: float, db_step, marker: bool = True,
 ):
-    n, store, token = g.n, g.store_path, g.build_token
-    n_blocks = g.n_blocks
-    _clear_stale_steps(rdir, start_step)  # e.g. resuming a killed barrier run
-    # static per-superstep work index: ONE row per destination block (the
-    # per-db offset index in the decoded store says which source blocks
-    # feed it; blocks with no in-edges still emit their teleport-only rank
-    # file each step). The repartition happens BEFORE truncation, so the
-    # cached LogicalRDD is physically range-clustered by db into exactly B
-    # partitions (~one destination block per task) and the superstep job
-    # is a SINGLE mapInPandas stage — no exchange at all, which also means
-    # AQE's size-based partition coalescing can never collapse the
-    # (few-KB!) work rows into one task and serialize the kernels.
-    work = truncate_plan(
-        g.block_meta.select(
-            F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
+    """The jobs transport of every PageRank variant: one ``map_blocks``
+    job per superstep running ``db_step(db, dsize, cur, nxt, dm, cache)
+    -> (l1, dm)`` per destination block, where the argument ``dm`` is the
+    previous step's global dangling mass (``dangling0`` for the first).
+    Stops at ``max_iter`` or once the summed L1 change is below ``tol``;
+    ``marker`` writes the ``part/g<k>`` resume records.
+    -> (supersteps, converged)."""
+    work = work_index(g)
+    dangling = [dangling0]
+
+    def step(k, cur, nxt):
+        dm = dangling[-1]
+        sums = map_blocks(
+            work,
+            lambda db, dsize, cache: db_step(db, dsize, cur, nxt, dm, cache),
+            "l1 double, dm double",
+        )
+        dangling.append(sums[1])
+        return sums
+
+    done = run_steps(
+        rdir, step, start_step, max_iter, keep_steps,
+        stop=lambda sums: sums[0] < tol, marker=marker,
     )
-
-    dangling = g.n_dangling / n if dangling0 is None else dangling0
-    supersteps: list[SuperstepInfo] = []
-    converged = False
-
-    for step in range(start_step, max_iter):
-        with StepTimer() as t:
-            base = (1.0 - damping) / n + damping * dangling / n
-            cur, nxt = f"{rdir}/step{step}", f"{rdir}/step{step + 1}"
-
-            def make_step_fn(_cur, _nxt, _base):
-                def step_fn(batches):
-                    # one partition = whole db-groups (physical clustering
-                    # by the pre-truncation repartition); batches never
-                    # span partitions, so concat + groupby is exact
-                    dfs = [b for b in batches if len(b)]
-                    if not dfs:
-                        return
-                    pdf = pd.concat(dfs, ignore_index=True)
-                    rows = []
-                    rs_cache: dict = {}
-                    for db, dsize in zip(pdf["db"], pdf["dsize"]):
-                        l1, dm = _superstep_db(
-                            store, token, rdir, int(db), int(dsize),
-                            n_blocks, _cur, _nxt, _base, damping, rs_cache,
-                        )
-                        rows.append((int(db), l1, dm))
-                    yield pd.DataFrame(rows, columns=["block", "l1", "dm"])
-
-                return step_fn
-
-            row = (
-                work.mapInPandas(
-                    make_step_fn(cur, nxt, base),
-                    "block int, l1 double, dm double",
-                )
-                .agg(F.sum("l1").alias("l1"), F.sum("dm").alias("dm"))
-                .collect()[0]
-            )
-            delta, next_dangling = float(row["l1"]), float(row["dm"])
-            # same completion marker as barrier mode: g<k> present == step
-            # done, both the resume position and the metrics record
-            _write_npy_atomic(
-                f"{rdir}/part/g{step}.npy",
-                np.array([delta, next_dangling]),
-            )
-            stale = step - keep_steps + 1
-            if stale >= 0:
-                shutil.rmtree(f"{rdir}/step{stale}", ignore_errors=True)
-        supersteps.append(SuperstepInfo(step, delta, dangling, t.seconds))
-        dangling = next_dangling
-        if delta < tol:
-            converged = True
-            break
-    return supersteps, converged
+    supersteps = [
+        SuperstepInfo(start_step + i, l1, dangling[i], secs)
+        for i, ((l1, _dm), secs) in enumerate(done)
+    ]
+    return supersteps, bool(done) and done[-1][0][0] < tol
 
 
 def _run_barrier(

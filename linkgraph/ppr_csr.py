@@ -34,22 +34,26 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .checkpoint import StepTimer
-from .lineage import truncate_plan
-from .pagerank import PageRankResult, SuperstepInfo
+from .pagerank import PageRankResult
 from .pagerank_csr import (
     BlockedGraph,
-    _completed_steps,
+    _prep_block,
+    _prior_info,
     _ranks_root,
+    _run_jobs,
     _superstep_db,
+)
+from .supersteps import (
     _write_npy_atomic,
+    completed_steps,
+    read_blocks,
+    seed_blocks,
     vmap_side,
 )
 
@@ -116,7 +120,7 @@ def ppr_blocked(
 
     rdir = run_dir or f"{_ranks_root(g)}/ppr-{uuid.uuid4().hex[:12]}"
     os.makedirs(f"{rdir}/part", exist_ok=True)
-    prior = _completed_steps(rdir)  # pagerank_blocked's resume protocol
+    prior = completed_steps(rdir)  # pagerank_blocked's resume protocol
     start_step = len(prior)
     seeds_sidecar = f"{rdir}/part/seeds.json"
     if start_step > 0:
@@ -143,23 +147,17 @@ def ppr_blocked(
     # rows per task, nothing O(V) on the driver. Skipped entirely on
     # resume (the retained step files + sidecars win).
     def prep_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        for d in ("step0", "dangling", "static", "tp"):
-            os.makedirs(f"{rdir}/{d}", exist_ok=True)
+        os.makedirs(f"{rdir}/tp", exist_ok=True)
         out = []
         for b, size, od in zip(pdf["block"], pdf["size"], pdf["od"]):
             b = int(b)
-            od_arr = np.asarray(od, dtype=np.int64)
-            with np.errstate(divide="ignore"):
-                inv = np.where(od_arr > 0, 1.0 / od_arr, 0.0)
-            _write_npy_atomic(f"{rdir}/static/inv{b}.npy", inv)
-            dang = np.flatnonzero(od_arr == 0)
-            _write_npy_atomic(f"{rdir}/dangling/b{b}.npy", dang)
             _write_npy_atomic(
                 f"{rdir}/tp/b{b}.npy", np.zeros(int(size), dtype=np.float64)
             )
-            r0 = np.full(int(size), 1.0 / n)
-            _write_npy_atomic(f"{rdir}/step0/b{b}.npy", r0)
-            _write_npy_atomic(f"{rdir}/step0/s{b}.npy", r0 * inv)
+            dang = _prep_block(
+                rdir, b, np.asarray(od, dtype=np.int64),
+                np.full(int(size), 1.0 / n),
+            )
             out.append((b, float(len(dang)) / n))
         return pd.DataFrame(out, columns=["block", "dm"])
 
@@ -175,21 +173,7 @@ def ppr_blocked(
         # prep job 2 (seed blocks only): overwrite the zero teleport file
         # with tp_val at seed positions. Runs strictly after job 1 (the
         # aggregate above is an action), so the atomic rename always wins.
-        sizes_by_block = g.block_meta.select("block", "size")
-
-        def seed_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            b = int(pdf["block"].iloc[0])
-            arr = np.zeros(int(pdf["size"].iloc[0]), dtype=np.float64)
-            arr[pdf["local"].to_numpy(dtype=np.int64)] = tp_val
-            _write_npy_atomic(f"{rdir}/tp/b{b}.npy", arr)
-            return pd.DataFrame({"block": [b]})
-
-        (
-            seed_pos.join(sizes_by_block, "block")
-            .groupBy("block")
-            .applyInPandas(seed_kernel, "block int")
-            .count()
-        )
+        seed_blocks(g, seed_pos, f"{rdir}/tp", 0.0, tp_val)
         # seed fingerprint AFTER the teleport sidecars land: a run killed
         # mid-prep re-runs prep (no completed-step marker yet), so the
         # sidecar is always consistent with the tp/ files it describes
@@ -199,93 +183,19 @@ def ppr_blocked(
         # resume: dangling mass of the last completed superstep
         dangling = float(prior[-1][1])
 
-    # prior steps re-enter the result with seconds=0.0; step 0's incoming
-    # dangling mass is the uniform start's n_dangling/n, later steps carry
-    # the recorded post-step mass forward (pagerank_blocked's convention)
-    prior_info = [
-        SuperstepInfo(
-            k,
-            float(rec[0]),
-            g.n_dangling / n if k == 0 else float(prior[k - 1][1]),
-            0.0,
+    def db_step(db, dsize, cur, nxt, dm, cache):
+        # the SHARED plain-path kernel, switched to the teleport vector by
+        # tp_dm (pagerank_csr.py)
+        return _superstep_db(
+            store, token, rdir, db, dsize, n_blocks, cur, nxt, 0.0, damping,
+            cache, tp_dm=(f"{rdir}/tp", dm),
         )
-        for k, rec in enumerate(prior)
-    ]
 
-    work = truncate_plan(
-        g.block_meta.select(
-            F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
-    )
-
-    supersteps: list[SuperstepInfo] = []
-    converged = bool(prior and float(prior[-1][0]) < tol)
-    for step in range(start_step, max_iter):
-        if converged:
-            break
-        with StepTimer() as t:
-            cur, nxt = f"{rdir}/step{step}", f"{rdir}/step{step + 1}"
-
-            def make_step_fn(_cur, _nxt, _dm):
-                def step_fn(batches):
-                    dfs = [b for b in batches if len(b)]
-                    if not dfs:
-                        return
-                    pdf = pd.concat(dfs, ignore_index=True)
-                    rows = []
-                    rs_cache: dict = {}
-                    for db, dsize in zip(pdf["db"], pdf["dsize"]):
-                        # the SHARED plain-path kernel, switched to the
-                        # teleport vector by tp_dm (pagerank_csr.py)
-                        l1, dm_next = _superstep_db(
-                            store, token, rdir, int(db), int(dsize),
-                            n_blocks, _cur, _nxt, 0.0, damping, rs_cache,
-                            tp_dm=(f"{rdir}/tp", _dm),
-                        )
-                        rows.append((int(db), l1, dm_next))
-                    yield pd.DataFrame(rows, columns=["block", "l1", "dm"])
-
-                return step_fn
-
-            row = (
-                work.mapInPandas(
-                    make_step_fn(cur, nxt, dangling),
-                    "block int, l1 double, dm double",
-                )
-                .agg(F.sum("l1").alias("l1"), F.sum("dm").alias("dm"))
-                .collect()[0]
-            )
-            delta, next_dangling = float(row["l1"]), float(row["dm"])
-            # completion marker: g<k> present == superstep k finished —
-            # the resume position AND the metrics record
-            _write_npy_atomic(
-                f"{rdir}/part/g{step}.npy",
-                np.array([delta, next_dangling]),
-            )
-            stale = step - keep_steps + 1
-            if stale >= 0:
-                shutil.rmtree(f"{rdir}/step{stale}", ignore_errors=True)
-        supersteps.append(SuperstepInfo(step, delta, dangling, t.seconds))
-        dangling = next_dangling
-        if delta < tol:
-            converged = True
-            break
-
-    supersteps = prior_info + supersteps
-    last = f"{rdir}/step{len(supersteps)}"
-
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            out.append((b, np.load(f"{last}/b{b}.npy")))
-        return pd.DataFrame(out, columns=["block", "rv"])
-
-    flat = (
-        g.block_meta.groupBy("block")
-        .applyInPandas(read_kernel, "block int, rv array<double>")
-        .select("block", F.posexplode("rv").alias("local", "rank"))
-        .join(vmap_side(g), ["block", "local"])
-        .select("id", "rank")
-    )
+    supersteps, converged = [], bool(prior and float(prior[-1][0]) < tol)
+    if not converged:
+        supersteps, converged = _run_jobs(
+            g, rdir, tol, max_iter, keep_steps, start_step, dangling, db_step,
+        )
+    supersteps = _prior_info(g, prior) + supersteps
+    flat = read_blocks(g, f"{rdir}/step{len(supersteps)}", {"rank": "b"})
     return PageRankResult(flat, len(supersteps), converged, supersteps)

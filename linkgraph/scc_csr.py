@@ -39,16 +39,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from . import native
 from .caching import register_cache
 from .labelprop_csr import id_ranks
 from .lineage import truncate_plan
-from .pagerank_csr import (
-    BlockedGraph,
-    _load_block,
-    _ranks_root,
+from .pagerank_csr import BlockedGraph, _load_block, _ranks_root, build_blocked
+from .supersteps import (
     _write_npy_atomic,
-    build_blocked,
+    gather_in,
+    map_blocks,
+    read_blocks,
+    run_steps,
+    scatter_in,
+    work_index,
 )
 
 _INF = np.inf
@@ -86,14 +88,6 @@ def build_scc_stores(
     return g_fwd, g_rev
 
 
-def _work_of(g: BlockedGraph) -> DataFrame:
-    return truncate_plan(
-        g.block_meta.select(
-            F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
-    )
-
-
 def strongly_connected_components_blocked(
     spark,
     g_fwd: BlockedGraph,
@@ -112,7 +106,7 @@ def strongly_connected_components_blocked(
     rstore, rtoken = g_rev.store_path, g_rev.build_token
     rdir = f"{_ranks_root(g_fwd)}/scc-{uuid.uuid4().hex[:12]}"
     os.makedirs(rdir, exist_ok=True)
-    work = _work_of(g_fwd)  # both stores share the block id space
+    work = work_index(g_fwd)  # both stores share the block id space
 
     # rank vector per block (dense id-ascending ranks — labelprop's
     # init), plus active=1 / comp=nan: ONE O(V) init shuffle total
@@ -150,13 +144,11 @@ def strongly_connected_components_blocked(
     outer_rounds = trim_rounds = 0
     n_active = g_fwd.n
 
-    def run_job(step_fn, schema="block int, changed long") -> int:
-        row = (
-            work.mapInPandas(step_fn, schema)
-            .agg(F.sum("changed").alias("c"))
-            .collect()[0]
-        )
-        return int(row["c"] or 0)
+    def run_job(kernel) -> int:
+        return int(map_blocks(work, kernel, "changed long")[0] or 0)
+
+    def load(d):
+        return lambda sb: np.load(f"{d}/b{sb}.npy")
 
     for _outer in range(max_outer):
         if n_active == 0:
@@ -169,76 +161,40 @@ def strongly_connected_components_blocked(
             a_cur = f"{rdir}/active{av}"
             ind_dir = f"{rdir}/ind"
 
-            def indeg_fn(batches, _a=a_cur, _out=ind_dir):
-                for pdf in batches:
-                    rows = []
-                    cache: dict = {}
-                    for db, dsize in zip(pdf["db"], pdf["dsize"]):
-                        db, dsize = int(db), int(dsize)
-                        acc = np.zeros(dsize, dtype=np.float64)
-                        blk = _load_block(fstore, ftoken, db, n_blocks)
-                        offs = blk[1]
-                        for sb in np.flatnonzero(np.diff(offs)):
-                            a, b_ = int(offs[sb]), int(offs[sb + 1])
-                            vs = cache.get(sb)
-                            if vs is None:
-                                vs = np.load(f"{_a}/b{sb}.npy")
-                                cache[sb] = vs
-                            if blk[0] == "p":
-                                native.scatter_add_pack16(
-                                    blk[2][a:b_], vs, acc)
-                            else:
-                                native.scatter_add32(
-                                    blk[2][a:b_], blk[3][a:b_], vs, acc)
-                        os.makedirs(_out, exist_ok=True)
-                        _write_npy_atomic(f"{_out}/b{db}.npy", acc)
-                        rows.append((db, 0))
-                    yield pd.DataFrame(rows, columns=["block", "changed"])
+            def indeg_kernel(db, dsize, cache, _a=a_cur, _out=ind_dir):
+                acc = scatter_in(
+                    _load_block(fstore, ftoken, db, n_blocks), cache,
+                    load(_a), np.zeros(dsize, dtype=np.float64),
+                )
+                os.makedirs(_out, exist_ok=True)
+                _write_npy_atomic(f"{_out}/b{db}.npy", acc)
+                return (0,)
 
-            run_job(indeg_fn)
+            run_job(indeg_kernel)
 
             a_nxt = f"{rdir}/active{av + 1}"
             c_cur, c_nxt = f"{rdir}/comp{cv}", f"{rdir}/comp{cv + 1}"
 
-            def trim_fn(batches, _a=a_cur, _an=a_nxt, _c=c_cur, _cn=c_nxt,
-                        _ind=ind_dir):
-                for pdf in batches:
-                    rows = []
-                    cache: dict = {}
-                    for db, dsize in zip(pdf["db"], pdf["dsize"]):
-                        db, dsize = int(db), int(dsize)
-                        outd = np.zeros(dsize, dtype=np.float64)
-                        blk = _load_block(rstore, rtoken, db, n_blocks)
-                        offs = blk[1]
-                        for sb in np.flatnonzero(np.diff(offs)):
-                            a, b_ = int(offs[sb]), int(offs[sb + 1])
-                            vs = cache.get(sb)
-                            if vs is None:
-                                vs = np.load(f"{_a}/b{sb}.npy")
-                                cache[sb] = vs
-                            if blk[0] == "p":
-                                native.scatter_add_pack16(
-                                    blk[2][a:b_], vs, outd)
-                            else:
-                                native.scatter_add32(
-                                    blk[2][a:b_], blk[3][a:b_], vs, outd)
-                        act = np.load(f"{_a}/b{db}.npy")
-                        ind = np.load(f"{_ind}/b{db}.npy")
-                        comp = np.load(f"{_c}/b{db}.npy").copy()
-                        rank = np.load(f"{rdir}/rank/b{db}.npy")
-                        keep = (act > 0) & (ind > 0) & (outd > 0)
-                        trimmed = (act > 0) & ~keep
-                        comp[trimmed] = rank[trimmed]  # singleton SCCs
-                        os.makedirs(_an, exist_ok=True)
-                        os.makedirs(_cn, exist_ok=True)
-                        _write_npy_atomic(
-                            f"{_an}/b{db}.npy",
-                            keep.astype(np.float64))
-                        _write_npy_atomic(f"{_cn}/b{db}.npy", comp)
-                        rows.append((db, int(trimmed.sum())))
-                    yield pd.DataFrame(rows, columns=["block", "changed"])
+            def trim_kernel(db, dsize, cache, _a=a_cur, _an=a_nxt, _c=c_cur,
+                            _cn=c_nxt, _ind=ind_dir):
+                outd = scatter_in(
+                    _load_block(rstore, rtoken, db, n_blocks), cache,
+                    load(_a), np.zeros(dsize, dtype=np.float64),
+                )
+                act = np.load(f"{_a}/b{db}.npy")
+                ind = np.load(f"{_ind}/b{db}.npy")
+                comp = np.load(f"{_c}/b{db}.npy").copy()
+                rank = np.load(f"{rdir}/rank/b{db}.npy")
+                keep = (act > 0) & (ind > 0) & (outd > 0)
+                trimmed = (act > 0) & ~keep
+                comp[trimmed] = rank[trimmed]  # singleton SCCs
+                os.makedirs(_an, exist_ok=True)
+                os.makedirs(_cn, exist_ok=True)
+                _write_npy_atomic(f"{_an}/b{db}.npy", keep.astype(np.float64))
+                _write_npy_atomic(f"{_cn}/b{db}.npy", comp)
+                return (int(trimmed.sum()),)
 
-            n_trimmed = run_job(trim_fn)
+            n_trimmed = run_job(trim_kernel)
             av += 1
             cv += 1
             n_active -= n_trimmed
@@ -249,160 +205,102 @@ def strongly_connected_components_blocked(
 
         # ---- COLOR: forward min fixpoint over the active subgraph ----
         a_cur = f"{rdir}/active{av}"
-        f0 = f"{rdir}/f0"
 
-        def color_init(batches, _a=a_cur, _f=f0):
-            for pdf in batches:
-                rows = []
-                for db in pdf["db"]:
-                    db = int(db)
-                    act = np.load(f"{_a}/b{db}.npy")
-                    rank = np.load(f"{rdir}/rank/b{db}.npy")
-                    os.makedirs(_f, exist_ok=True)
-                    _write_npy_atomic(
-                        f"{_f}/b{db}.npy",
-                        np.where(act > 0, rank, _INF))
-                    rows.append((db, 0))
-                yield pd.DataFrame(rows, columns=["block", "changed"])
+        def color_init(db, dsize, cache, _a=a_cur):
+            act = np.load(f"{_a}/b{db}.npy")
+            rank = np.load(f"{rdir}/rank/b{db}.npy")
+            os.makedirs(f"{rdir}/f0", exist_ok=True)
+            _write_npy_atomic(
+                f"{rdir}/f0/b{db}.npy", np.where(act > 0, rank, _INF)
+            )
+            return (0,)
 
         run_job(color_init)
-        ft = 0
-        for _ in range(max_rounds):
-            f_cur, f_nxt = f"{rdir}/f{ft}", f"{rdir}/f{ft + 1}"
 
-            def color_fn(batches, _a=a_cur, _f=f_cur, _fn=f_nxt):
-                for pdf in batches:
-                    rows = []
-                    cache: dict = {}
-                    for db in pdf["db"]:
-                        db = int(db)
-                        f_old = np.load(f"{_f}/b{db}.npy")
-                        acc = f_old.copy()
-                        blk = _load_block(fstore, ftoken, db, n_blocks)
-                        offs = blk[1]
-                        for sb in np.flatnonzero(np.diff(offs)):
-                            a, b_ = int(offs[sb]), int(offs[sb + 1])
-                            vs = cache.get(sb)
-                            if vs is None:
-                                # inactive sources propagate nothing
-                                vs = np.where(
-                                    np.load(f"{_a}/b{sb}.npy") > 0,
-                                    np.load(f"{_f}/b{sb}.npy"), _INF)
-                                cache[sb] = vs
-                            if blk[0] == "p":
-                                native.scatter_min_pack16(
-                                    blk[2][a:b_], vs, acc)
-                            else:
-                                native.scatter_min32(
-                                    blk[2][a:b_], blk[3][a:b_], vs, acc)
-                        act = np.load(f"{_a}/b{db}.npy") > 0
-                        f_new = np.where(act, acc, f_old)
-                        os.makedirs(_fn, exist_ok=True)
-                        _write_npy_atomic(f"{_fn}/b{db}.npy", f_new)
-                        rows.append((db, int((f_new != f_old).sum())))
-                    yield pd.DataFrame(rows, columns=["block", "changed"])
+        def color_step(k, cur, nxt, _a=a_cur):
+            def kernel(db, dsize, cache):
+                f_old = np.load(f"{cur}/b{db}.npy")
+                # inactive sources propagate nothing
+                acc = scatter_in(
+                    _load_block(fstore, ftoken, db, n_blocks), cache,
+                    lambda sb: np.where(
+                        np.load(f"{_a}/b{sb}.npy") > 0,
+                        np.load(f"{cur}/b{sb}.npy"), _INF),
+                    f_old.copy(), op="min",
+                )
+                act = np.load(f"{_a}/b{db}.npy") > 0
+                f_new = np.where(act, acc, f_old)
+                os.makedirs(nxt, exist_ok=True)
+                _write_npy_atomic(f"{nxt}/b{db}.npy", f_new)
+                return (int((f_new != f_old).sum()),)
 
-            changed = run_job(color_fn)
-            ft += 1
-            if ft >= 2:
-                shutil.rmtree(f"{rdir}/f{ft - 2}", ignore_errors=True)
-            if changed == 0:
-                break
+            return (run_job(kernel),)
+
+        ft = len(run_steps(
+            rdir, color_step, 0, max_rounds, dirs=("f",),
+            stop=lambda s: s[0] == 0,
+        ))
         f_fin = f"{rdir}/f{ft}"
 
         # ---- SETTLE: boolean backward reach within color classes ----
-        r0 = f"{rdir}/r0"
-
-        def settle_init(batches, _a=a_cur, _f=f_fin, _r=r0):
-            for pdf in batches:
-                rows = []
-                for db in pdf["db"]:
-                    db = int(db)
-                    act = np.load(f"{_a}/b{db}.npy") > 0
-                    fv = np.load(f"{_f}/b{db}.npy")
-                    rank = np.load(f"{rdir}/rank/b{db}.npy")
-                    os.makedirs(_r, exist_ok=True)
-                    _write_npy_atomic(
-                        f"{_r}/b{db}.npy",
-                        (act & (fv == rank)).astype(np.float64))
-                    rows.append((db, 0))
-                yield pd.DataFrame(rows, columns=["block", "changed"])
+        def settle_init(db, dsize, cache, _a=a_cur, _f=f_fin):
+            act = np.load(f"{_a}/b{db}.npy") > 0
+            fv = np.load(f"{_f}/b{db}.npy")
+            rank = np.load(f"{rdir}/rank/b{db}.npy")
+            os.makedirs(f"{rdir}/r0", exist_ok=True)
+            _write_npy_atomic(
+                f"{rdir}/r0/b{db}.npy", (act & (fv == rank)).astype(np.float64)
+            )
+            return (0,)
 
         run_job(settle_init)
-        rt = 0
-        for _ in range(max_rounds):
-            r_cur, r_nxt = f"{rdir}/r{rt}", f"{rdir}/r{rt + 1}"
 
-            def settle_fn(batches, _f=f_fin, _r=r_cur, _rn=r_nxt):
-                for pdf in batches:
-                    rows = []
-                    cache: dict = {}
-                    for db in pdf["db"]:
-                        db = int(db)
-                        reached = np.load(f"{_r}/b{db}.npy").copy()
-                        fv = np.load(f"{_f}/b{db}.npy")
-                        blk = _load_block(rstore, rtoken, db, n_blocks)
-                        offs = blk[1]
-                        for sb in np.flatnonzero(np.diff(offs)):
-                            a, b_ = int(offs[sb]), int(offs[sb + 1])
-                            vs = cache.get(sb)
-                            if vs is None:
-                                # reached sources broadcast their color;
-                                # nan (never equal) silences the rest
-                                vs = np.where(
-                                    np.load(f"{_r}/b{sb}.npy") > 0,
-                                    np.load(f"{_f}/b{sb}.npy"), np.nan)
-                                cache[sb] = vs
-                            if blk[0] == "p":
-                                lab, dl = native.gather_labels_pack16(
-                                    blk[2][a:b_], vs)
-                            else:
-                                lab = native.gather_labels32(
-                                    blk[2][a:b_], vs)
-                                dl = np.ascontiguousarray(
-                                    blk[3][a:b_], dtype=np.int32)
-                            ok = lab == fv[dl]  # per-dst color check
-                            if ok.any():
-                                reached[dl[ok]] = 1.0
-                        os.makedirs(_rn, exist_ok=True)
-                        _write_npy_atomic(f"{_rn}/b{db}.npy", reached)
-                        old = np.load(f"{_r}/b{db}.npy")
-                        rows.append((db, int((reached != old).sum())))
-                    yield pd.DataFrame(rows, columns=["block", "changed"])
+        def settle_step(k, cur, nxt, _f=f_fin):
+            def kernel(db, dsize, cache):
+                old = np.load(f"{cur}/b{db}.npy")
+                reached = old.copy()
+                fv = np.load(f"{_f}/b{db}.npy")
+                # reached sources broadcast their color; nan (never
+                # equal) silences the rest
+                lab, dl = gather_in(
+                    _load_block(rstore, rtoken, db, n_blocks), cache,
+                    lambda sb: np.where(
+                        np.load(f"{cur}/b{sb}.npy") > 0,
+                        np.load(f"{_f}/b{sb}.npy"), np.nan),
+                )
+                ok = lab == fv[dl]  # per-dst color check
+                if ok.any():
+                    reached[dl[ok]] = 1.0
+                os.makedirs(nxt, exist_ok=True)
+                _write_npy_atomic(f"{nxt}/b{db}.npy", reached)
+                return (int((reached != old).sum()),)
 
-            changed = run_job(settle_fn)
-            rt += 1
-            if rt >= 2:
-                shutil.rmtree(f"{rdir}/r{rt - 2}", ignore_errors=True)
-            if changed == 0:
-                break
+            return (run_job(kernel),)
+
+        rt = len(run_steps(
+            rdir, settle_step, 0, max_rounds, dirs=("r",),
+            stop=lambda s: s[0] == 0,
+        ))
         r_fin = f"{rdir}/r{rt}"
 
         # ---- APPLY: settled vertices leave the active set ----
         a_nxt = f"{rdir}/active{av + 1}"
         c_cur, c_nxt = f"{rdir}/comp{cv}", f"{rdir}/comp{cv + 1}"
 
-        def apply_fn(batches, _a=a_cur, _an=a_nxt, _c=c_cur, _cn=c_nxt,
-                     _f=f_fin, _r=r_fin):
-            for pdf in batches:
-                rows = []
-                for db in pdf["db"]:
-                    db = int(db)
-                    act = np.load(f"{_a}/b{db}.npy")
-                    reached = np.load(f"{_r}/b{db}.npy") > 0
-                    fv = np.load(f"{_f}/b{db}.npy")
-                    comp = np.load(f"{_c}/b{db}.npy").copy()
-                    comp[reached] = fv[reached]
-                    os.makedirs(_an, exist_ok=True)
-                    os.makedirs(_cn, exist_ok=True)
-                    _write_npy_atomic(
-                        f"{_an}/b{db}.npy",
-                        np.where(reached, 0.0, act))
-                    _write_npy_atomic(f"{_cn}/b{db}.npy", comp)
-                    rows.append((db, int(reached.sum())))
-                yield pd.DataFrame(rows, columns=["block", "changed"])
+        def apply_kernel(db, dsize, cache, _a=a_cur, _an=a_nxt, _c=c_cur,
+                         _cn=c_nxt, _f=f_fin, _r=r_fin):
+            act = np.load(f"{_a}/b{db}.npy")
+            reached = np.load(f"{_r}/b{db}.npy") > 0
+            fv = np.load(f"{_f}/b{db}.npy")
+            comp = np.load(f"{_c}/b{db}.npy").copy()
+            comp[reached] = fv[reached]
+            os.makedirs(_an, exist_ok=True)
+            os.makedirs(_cn, exist_ok=True)
+            _write_npy_atomic(f"{_an}/b{db}.npy", np.where(reached, 0.0, act))
+            _write_npy_atomic(f"{_cn}/b{db}.npy", comp)
+            return (int(reached.sum()),)
 
-        n_settled = run_job(apply_fn)
+        n_settled = run_job(apply_kernel)
         av += 1
         cv += 1
         n_active -= n_settled
@@ -417,21 +315,9 @@ def strongly_connected_components_blocked(
         stats["outer_rounds"] = outer_rounds
         stats["trim_rounds"] = trim_rounds
 
-    last = f"{rdir}/comp{cv}"
-
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            out.append((b, np.load(f"{last}/b{b}.npy")))
-        return pd.DataFrame(out, columns=["block", "cvv"])
-
     labels = (
-        g_fwd.block_meta.groupBy("block")
-        .applyInPandas(read_kernel, "block int, cvv array<double>")
-        .select("block", F.posexplode("cvv").alias("local", "crank"))
+        read_blocks(g_fwd, f"{rdir}/comp{cv}", {"crank": "b"})
         .where(~F.isnan("crank"))
-        .join(g_fwd.vmap, ["block", "local"])
         .select("id", F.col("crank").cast("long").alias("crank"))
     )
     owner = ranks.select(

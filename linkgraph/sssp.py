@@ -47,14 +47,20 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from . import native
 from .lineage import truncate_plan
-from .pagerank_csr import (
-    BlockedGraph,
-    _npy_cache_dir,
-    _ranks_root,
+from .pagerank_csr import BlockedGraph, _npy_cache_dir, _ranks_root
+from .supersteps import (
     _write_npy_atomic,
+    cached,
+    fill_blocks,
+    map_blocks,
+    read_blocks,
+    run_steps,
+    scatter_in,
+    seed_blocks,
+    segments,
     vmap_side,
+    work_index,
 )
 
 
@@ -236,9 +242,10 @@ def build_weight_store(
 
 def _load_wblock(wpath: str, token: str, db: int, n_blocks: int):
     """Worker-side weighted edges for one destination block:
-    (offs, sl_i32, dl_i32, w_f64), offs the B+1 prefix-sum index by source
-    block. First touch decodes parquet -> raw .npy (atomic, idempotent);
-    later loads anywhere on the host are zero-copy mmaps."""
+    ("wt", offs, sl_i32, dl_i32, w_f64), offs the B+1 prefix-sum index by
+    source block (the ``supersteps.scatter_in`` block layout). First
+    touch decodes parquet -> raw .npy (atomic, idempotent); later loads
+    anywhere on the host are zero-copy mmaps."""
     cache_dir = _npy_cache_dir(wpath, f"{token}-w")
     base = f"{cache_dir}/{db}"
     offs_p = f"{base}.offs.npy"
@@ -264,6 +271,7 @@ def _load_wblock(wpath: str, token: str, db: int, n_blocks: int):
         _write_npy_atomic(f"{base}.w.npy", w)
         _write_npy_atomic(offs_p, offs)  # offs last: presence = decoded
     return (
+        "wt",
         np.load(offs_p),
         np.load(f"{base}.sl.npy", mmap_mode="r"),
         np.load(f"{base}.dl.npy", mmap_mode="r"),
@@ -337,106 +345,49 @@ def sssp_voronoi_blocked(
         .count()
     )
 
-    work = truncate_plan(
-        g.block_meta.select(
-            F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
-    )
+    work = work_index(g)
+    never = np.iinfo(np.int64).max
 
-    for step in range(max_hops):
-        cur, nxt = f"{rdir}/step{step}", f"{rdir}/step{step + 1}"
-
-        def make_step_fn(_cur, _nxt):
-            def step_fn(batches):
-                dfs = [b for b in batches if len(b)]
-                if not dfs:
-                    return
-                pdf = pd.concat(dfs, ignore_index=True)
-                rows = []
-                vec_cache: dict = {}
-                for db in pdf["db"]:
-                    db = int(db)
-                    prev_d = np.load(f"{_cur}/b{db}.npy")
-                    acc_d = prev_d.copy()
-                    offs, sl, dl, w = _load_wblock(
-                        wpath, token, db, n_blocks
-                    )
-                    segs = np.flatnonzero(np.diff(offs))
-                    # pass 1: minimum distance (native weighted kernel)
-                    for sb in segs:
-                        a, b_ = int(offs[sb]), int(offs[sb + 1])
-                        vs = vec_cache.get(sb)
-                        if vs is None:
-                            vs = (
-                                np.load(f"{_cur}/b{sb}.npy"),
-                                np.load(f"{_cur}/o{sb}.npy"),
-                            )
-                            vec_cache[sb] = vs
-                        native.scatter_minw32(
-                            sl[a:b_], dl[a:b_], w[a:b_], vs[0], acc_d
-                        )
-                    # pass 2: owner = min seed among dist-equal candidates;
-                    # previous owner survives only where its dist did
-                    acc_o = np.where(
-                        acc_d == prev_d,
-                        np.load(f"{_cur}/o{db}.npy"),
-                        np.iinfo(np.int64).max,
-                    ).astype(np.int64, copy=False)
-                    for sb in segs:
-                        a, b_ = int(offs[sb]), int(offs[sb + 1])
-                        vs = vec_cache[sb]
-                        seg_sl = np.asarray(sl[a:b_], dtype=np.int64)
-                        seg_dl = np.asarray(dl[a:b_], dtype=np.int64)
-                        cand_d = vs[0][seg_sl] + w[a:b_]
-                        mask = cand_d == acc_d[seg_dl]
-                        if mask.any():
-                            np.minimum.at(
-                                acc_o, seg_dl[mask], vs[1][seg_sl[mask]]
-                            )
-                    os.makedirs(_nxt, exist_ok=True)
-                    _write_npy_atomic(f"{_nxt}/b{db}.npy", acc_d)
-                    _write_npy_atomic(f"{_nxt}/o{db}.npy", acc_o)
-                    rows.append((db, int(np.isfinite(acc_d).sum())))
-                yield pd.DataFrame(rows, columns=["block", "reached"])
-
-            return step_fn
-
-        (
-            work.mapInPandas(make_step_fn(cur, nxt), "block int, reached long")
-            .agg(F.sum("reached"))
-            .collect()
-        )
-        stale = step - keep_steps + 1
-        if stale >= 0:
-            shutil.rmtree(f"{rdir}/step{stale}", ignore_errors=True)
-
-    last = f"{rdir}/step{max_hops}"
-
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            out.append(
-                (b, np.load(f"{last}/b{b}.npy"), np.load(f"{last}/o{b}.npy"))
+    def step(k, cur, nxt):
+        def kernel(db, dsize, cache):
+            prev_d = np.load(f"{cur}/b{db}.npy")
+            blk = _load_wblock(wpath, token, db, n_blocks)
+            # pass 1: minimum distance (native weighted kernel)
+            acc_d = scatter_in(
+                blk, cache, lambda sb: np.load(f"{cur}/b{sb}.npy"),
+                prev_d.copy(), op="min",
             )
-        return pd.DataFrame(out, columns=["block", "dv", "ov"])
+            # pass 2: owner = min seed among dist-equal candidates;
+            # previous owner survives only where its dist did
+            acc_o = np.where(
+                acc_d == prev_d, np.load(f"{cur}/o{db}.npy"), never
+            ).astype(np.int64, copy=False)
+            _, offs, sl, dl, w = blk
+            for sb, a, b_ in segments(offs):
+                seg_sl = np.asarray(sl[a:b_], dtype=np.int64)
+                seg_dl = np.asarray(dl[a:b_], dtype=np.int64)
+                cand_d = cache[sb][seg_sl] + w[a:b_]
+                mask = cand_d == acc_d[seg_dl]
+                if mask.any():
+                    owners = cached(
+                        cache, ("o", sb),
+                        lambda key: np.load(f"{cur}/o{key[1]}.npy"),
+                    )
+                    np.minimum.at(acc_o, seg_dl[mask], owners[seg_sl[mask]])
+            os.makedirs(nxt, exist_ok=True)
+            _write_npy_atomic(f"{nxt}/b{db}.npy", acc_d)
+            _write_npy_atomic(f"{nxt}/o{db}.npy", acc_o)
+            return (int(np.isfinite(acc_d).sum()),)
 
+        return map_blocks(work, kernel, "reached long")
+
+    run_steps(rdir, step, 0, max_hops, keep_steps)
     out = truncate_plan(
-        g.block_meta.groupBy("block")
-        .applyInPandas(
-            read_kernel, "block int, dv array<double>, ov array<long>"
-        )
-        .select(
-            "block",
-            F.posexplode(F.arrays_zip("dv", "ov")).alias("local", "z"),
-        )
-        .select(
-            "block", "local",
-            F.col("z.dv").alias("dist"), F.col("z.ov").alias("ov"),
-        )
-        .where(F.col("dist") != float("inf"))
-        .join(vmap_side(g), ["block", "local"])
-        .select("id", F.col("ov").alias("seed"), "dist"),
+        read_blocks(
+            g, f"{rdir}/step{max_hops}", {"dist": "b", "seed": "o"},
+            types={"seed": "long"},
+        ).where(F.col("dist") != float("inf"))
+        .select("id", "seed", "dist"),
         eager=False,
     )
     out.count()
@@ -464,122 +415,43 @@ def sssp_blocked(
     cross-level agreement signal for the scaling bench), and
     ``final_dir``/``run_dir`` (the final distance vectors; cleanup
     becomes the CALLER's job so it can checksum them first)."""
-    import time as _time
-
     n_blocks, token = g.n_blocks, g.build_token
     rdir = f"{_ranks_root(g)}/sssp-{uuid.uuid4().hex[:12]}"
     os.makedirs(rdir, exist_ok=True)
 
-    def inf_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        os.makedirs(f"{rdir}/step0", exist_ok=True)
-        for b, size in zip(pdf["block"], pdf["size"]):
-            _write_npy_atomic(
-                f"{rdir}/step0/b{int(b)}.npy",
-                np.full(int(size), np.inf, dtype=np.float64),
+    fill_blocks(g, f"{rdir}/step0", np.inf)
+    pos = seeds.select("id").distinct().join(vmap_side(g), "id")
+    seed_blocks(g, pos, f"{rdir}/step0", np.inf, 0.0)
+
+    work = work_index(g)
+
+    def step(k, cur, nxt):
+        def kernel(db, dsize, cache):
+            # fused gather-add-scatter-min (native kernel; chunked-numpy
+            # fallback inside)
+            acc = scatter_in(
+                _load_wblock(wpath, token, db, n_blocks), cache,
+                lambda sb: np.load(f"{cur}/b{sb}.npy"),
+                np.load(f"{cur}/b{db}.npy").copy(), op="min",
             )
-        return pd.DataFrame({"block": [int(b) for b in pdf["block"]]})
+            os.makedirs(nxt, exist_ok=True)
+            _write_npy_atomic(f"{nxt}/b{db}.npy", acc)
+            return (int(np.isfinite(acc).sum()),)
 
-    g.block_meta.groupBy("block").applyInPandas(
-        inf_kernel, "block int"
-    ).count()
+        return map_blocks(work, kernel, "reached long")
 
-    sizes_by_block = g.block_meta.select("block", "size")
-
-    def seed_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = int(pdf["block"].iloc[0])
-        arr = np.full(int(pdf["size"].iloc[0]), np.inf, dtype=np.float64)
-        arr[pdf["local"].to_numpy(dtype=np.int64)] = 0.0
-        _write_npy_atomic(f"{rdir}/step0/b{b}.npy", arr)
-        return pd.DataFrame({"block": [b]})
-
-    (
-        seeds.select("id").distinct()
-        .join(vmap_side(g), "id")
-        .join(sizes_by_block, "block")
-        .select("block", "local", "size")
-        .groupBy("block")
-        .applyInPandas(seed_kernel, "block int")
-        .count()
-    )
-
-    work = truncate_plan(
-        g.block_meta.select(
-            F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
-    )
-
-    step_secs: list[float] = []
-    reached_per_step: list[int] = []
-    for step in range(max_hops):
-        t_step = _time.perf_counter()
-        cur, nxt = f"{rdir}/step{step}", f"{rdir}/step{step + 1}"
-
-        def make_step_fn(_cur, _nxt):
-            def step_fn(batches):
-                dfs = [b for b in batches if len(b)]
-                if not dfs:
-                    return
-                pdf = pd.concat(dfs, ignore_index=True)
-                rows = []
-                vec_cache: dict = {}
-                for db in pdf["db"]:
-                    db = int(db)
-                    acc = np.load(f"{_cur}/b{db}.npy").copy()
-                    offs, sl, dl, w = _load_wblock(
-                        wpath, token, db, n_blocks
-                    )
-                    for sb in np.flatnonzero(np.diff(offs)):
-                        a, b_ = int(offs[sb]), int(offs[sb + 1])
-                        vs = vec_cache.get(sb)
-                        if vs is None:
-                            vs = np.load(f"{_cur}/b{sb}.npy")
-                            vec_cache[sb] = vs
-                        # fused gather-add-scatter-min (native kernel;
-                        # chunked-numpy fallback inside)
-                        native.scatter_minw32(
-                            sl[a:b_], dl[a:b_], w[a:b_], vs, acc
-                        )
-                    os.makedirs(_nxt, exist_ok=True)
-                    _write_npy_atomic(f"{_nxt}/b{db}.npy", acc)
-                    rows.append((db, int(np.isfinite(acc).sum())))
-                yield pd.DataFrame(rows, columns=["block", "reached"])
-
-            return step_fn
-
-        reached = int(
-            work.mapInPandas(make_step_fn(cur, nxt), "block int, reached long")
-            .agg(F.sum("reached"))
-            .collect()[0][0]
-            or 0
-        )
-        step_secs.append(_time.perf_counter() - t_step)
-        reached_per_step.append(reached)
-        stale = step - keep_steps + 1
-        if stale >= 0:
-            shutil.rmtree(f"{rdir}/step{stale}", ignore_errors=True)
-
+    done = run_steps(rdir, step, 0, max_hops, keep_steps)
     last = f"{rdir}/step{max_hops}"
     if stats is not None:
-        stats["step_secs"] = [round(s, 3) for s in step_secs]
+        stats["step_secs"] = [round(secs, 3) for _, secs in done]
         stats["steps"] = max_hops
-        stats["reached"] = reached_per_step
+        stats["reached"] = [int(sums[0] or 0) for sums, _ in done]
         stats["final_dir"] = last
         stats["run_dir"] = rdir
 
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            out.append((b, np.load(f"{last}/b{b}.npy")))
-        return pd.DataFrame(out, columns=["block", "dv"])
-
     out = truncate_plan(
-        g.block_meta.groupBy("block")
-        .applyInPandas(read_kernel, "block int, dv array<double>")
-        .select("block", F.posexplode("dv").alias("local", "dist"))
-        .where(F.col("dist") != float("inf"))
-        .join(vmap_side(g), ["block", "local"])
-        .select("id", "dist"),
+        read_blocks(g, last, {"dist": "b"})
+        .where(F.col("dist") != float("inf")),
         eager=False,
     )
     out.count()

@@ -25,19 +25,22 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .checkpoint import StepTimer
-from . import native
-from .lineage import truncate_plan
-from .pagerank import PageRankResult, SuperstepInfo
-from .pagerank_csr import BlockedGraph, _ranks_root, _write_npy_atomic
+from .pagerank import PageRankResult
+from .pagerank_csr import (
+    BlockedGraph,
+    _apply_ranks,
+    _prep_block,
+    _ranks_root,
+    _run_jobs,
+)
 from .sssp import _load_wblock
+from .supersteps import read_blocks, scatter_in
 
 
 def wpagerank_blocked(
@@ -130,21 +133,13 @@ def wpagerank_blocked(
     )
 
     def prep_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        for d in ("step0", "dangling", "static"):
-            os.makedirs(f"{rdir}/{d}", exist_ok=True)
         out = []
         for b, sv in zip(pdf["block"], pdf["sv"]):
-            b = int(b)
-            sv_arr = np.asarray(sv, dtype=np.float64)
-            with np.errstate(divide="ignore"):
-                inv = np.where(sv_arr > 0, 1.0 / sv_arr, 0.0)
-            _write_npy_atomic(f"{rdir}/static/inv{b}.npy", inv)
-            dang = np.flatnonzero(sv_arr <= 0)
-            _write_npy_atomic(f"{rdir}/dangling/b{b}.npy", dang)
-            r0 = np.full(len(sv_arr), 1.0 / n)
-            _write_npy_atomic(f"{rdir}/step0/b{b}.npy", r0)
-            _write_npy_atomic(f"{rdir}/step0/s{b}.npy", r0 * inv)
-            out.append((b, float(len(dang)) / n))
+            dang = _prep_block(
+                rdir, int(b), np.asarray(sv, dtype=np.float64),
+                np.full(len(sv), 1.0 / n),
+            )
+            out.append((int(b), float(len(dang)) / n))
         return pd.DataFrame(out, columns=["block", "dm"])
 
     dangling = float(
@@ -155,106 +150,26 @@ def wpagerank_blocked(
         or 0.0
     )
 
-    work = truncate_plan(
-        g.block_meta.select(
-            F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
+    def db_step(db, dsize, cur, nxt, dm, cache):
+        # fused gather-multiply-scatter-add over the weighted segments
+        # (native kernel; chunked-numpy fallback inside)
+        acc = scatter_in(
+            _load_wblock(wpath, token, db, n_blocks), cache,
+            lambda sb: np.load(f"{cur}/s{sb}.npy", mmap_mode="r"),
+            np.zeros(dsize),
+        )
+        base = (1.0 - damping) / n + damping * dm / n
+        return _apply_ranks(rdir, db, acc, cur, nxt, base, damping)
+
+    supersteps, converged = _run_jobs(
+        g, rdir, tol, max_iter, keep_steps, 0, dangling, db_step,
+        marker=False,
     )
-
-    supersteps: list[SuperstepInfo] = []
-    converged = False
-    import time as _time
-
-    step_secs: list[float] = []
-    for step in range(max_iter):
-        t_step = _time.perf_counter()
-        with StepTimer() as t:
-            base = (1.0 - damping) / n + damping * dangling / n
-            cur, nxt = f"{rdir}/step{step}", f"{rdir}/step{step + 1}"
-
-            def make_step_fn(_cur, _nxt, _base):
-                def step_fn(batches):
-                    dfs = [b for b in batches if len(b)]
-                    if not dfs:
-                        return
-                    pdf = pd.concat(dfs, ignore_index=True)
-                    rows = []
-                    rs_cache: dict = {}
-                    for db, dsize in zip(pdf["db"], pdf["dsize"]):
-                        db, dsize = int(db), int(dsize)
-                        acc = np.zeros(dsize)
-                        offs, sl, dl, w = _load_wblock(
-                            wpath, token, db, n_blocks
-                        )
-                        for sb in np.flatnonzero(np.diff(offs)):
-                            a, b_ = int(offs[sb]), int(offs[sb + 1])
-                            rs = rs_cache.get(sb)
-                            if rs is None:
-                                rs = np.load(
-                                    f"{_cur}/s{sb}.npy", mmap_mode="r"
-                                )
-                                rs_cache[sb] = rs
-                            # fused gather-multiply-scatter-add (native
-                            # kernel; chunked-numpy fallback inside)
-                            native.scatter_addw32(
-                                sl[a:b_], dl[a:b_], w[a:b_], rs, acc
-                            )
-                        new = _base + damping * acc
-                        old = np.load(f"{_cur}/b{db}.npy", mmap_mode="r")
-                        l1 = float(np.abs(new - old).sum())
-                        dang = np.load(
-                            f"{rdir}/dangling/b{db}.npy", mmap_mode="r"
-                        )
-                        dm = float(new[dang].sum()) if len(dang) else 0.0
-                        inv = np.load(
-                            f"{rdir}/static/inv{db}.npy", mmap_mode="r"
-                        )
-                        os.makedirs(_nxt, exist_ok=True)
-                        _write_npy_atomic(f"{_nxt}/b{db}.npy", new)
-                        _write_npy_atomic(f"{_nxt}/s{db}.npy", new * inv)
-                        rows.append((db, l1, dm))
-                    yield pd.DataFrame(rows, columns=["block", "l1", "dm"])
-
-                return step_fn
-
-            row = (
-                work.mapInPandas(
-                    make_step_fn(cur, nxt, base),
-                    "block int, l1 double, dm double",
-                )
-                .agg(F.sum("l1").alias("l1"), F.sum("dm").alias("dm"))
-                .collect()[0]
-            )
-            delta, next_dangling = float(row["l1"]), float(row["dm"])
-            stale = step - keep_steps + 1
-            if stale >= 0:
-                shutil.rmtree(f"{rdir}/step{stale}", ignore_errors=True)
-        step_secs.append(_time.perf_counter() - t_step)
-        supersteps.append(SuperstepInfo(step, delta, dangling, t.seconds))
-        dangling = next_dangling
-        if tol > 0 and delta < tol:
-            converged = True
-            break
-
     last = f"{rdir}/step{len(supersteps)}"
     if stats is not None:
-        stats["step_secs"] = [round(s, 3) for s in step_secs]
+        stats["step_secs"] = [round(s.seconds, 3) for s in supersteps]
         stats["steps"] = len(supersteps)
         stats["final_dir"] = last
         stats["run_dir"] = rdir
-
-    def read_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for b in pdf["block"]:
-            b = int(b)
-            out.append((b, np.load(f"{last}/b{b}.npy")))
-        return pd.DataFrame(out, columns=["block", "rv"])
-
-    flat = (
-        g.block_meta.groupBy("block")
-        .applyInPandas(read_kernel, "block int, rv array<double>")
-        .select("block", F.posexplode("rv").alias("local", "rank"))
-        .join(g.vmap, ["block", "local"])
-        .select("id", "rank")
-    )
+    flat = read_blocks(g, last, {"rank": "b"})
     return PageRankResult(flat, len(supersteps), converged, supersteps)

@@ -19,6 +19,27 @@ def blocked_sym(spark, small, tmp_path_factory):
     )
 
 
+def test_symmetrize_rows_equal_two_branch_union(spark):
+    """One exploded pass emits the same row multiset as the union of both
+    directions, duplicates and self-loops included."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    edges = spark.createDataFrame(
+        [(1, 2, "a"), (2, 2, "b"), (1, 2, "c"), (3, 1, "d")],
+        "src long, dst long, tag string",
+    )
+    union = edges.select("src", "dst").unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    got = symmetrize(edges)
+    assert got.columns == ["src", "dst"]
+    assert Counter(map(tuple, got.collect())) == Counter(
+        map(tuple, union.collect())
+    )
+
+
 def test_blocked_cc_equals_flat(spark, small, blocked_sym):
     flat = collect_map(
         connected_components(spark, small.edges, small.vertices),

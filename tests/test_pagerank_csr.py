@@ -199,3 +199,24 @@ def test_delete_removes_store_and_sidecars(spark, small, tmp_path_factory):
     assert os.path.isdir(store)
     g.delete()
     assert not os.path.exists(store)  # edges, meta, ranks, npy all gone
+
+
+def test_build_blocked_drops_edges_outside_vertices(spark, tmp_path):
+    """An edge with an endpoint outside ``vertices`` is neither stored nor
+    counted in any out-degree: (0, 3) vanishes, vertex 0 keeps od 1."""
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (0, 3)], "src long, dst long"
+    )
+    verts = spark.createDataFrame([(0,), (1,), (2,)], "id long")
+    g = build_blocked(
+        spark, edges, verts, n_blocks=2, store_path=str(tmp_path / "drop")
+    )
+    try:
+        assert (g.n, g.sum_od) == (3, 3)
+        od = {r["block"]: r["od"] for r in g.block_meta.collect()}
+        got = {
+            r["id"]: od[r["block"]][r["local"]] for r in g.vmap.collect()
+        }
+        assert got == {0: 1, 1: 1, 2: 1}
+    finally:
+        g.delete()

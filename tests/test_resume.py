@@ -3,7 +3,7 @@ state identical to an uninterrupted run (BASELINE.json:6,14)."""
 
 import math
 
-from linkgraph.checkpoint import CheckpointManager
+from linkgraph.checkpoint import CheckpointManager, run_id_from_env
 from linkgraph.labelprop import label_propagation
 from linkgraph.pagerank import pagerank
 
@@ -55,3 +55,12 @@ def test_labelprop_resume_exact(spark, tiny, tmp_path):
         "id", "label",
     )
     assert resumed == full
+
+
+def test_run_id_from_env_default_and_set(monkeypatch):
+    monkeypatch.delenv("LINKGRAPH_RUN_ID", raising=False)
+    assert run_id_from_env() == "run-0"
+    assert run_id_from_env("nightly") == "nightly"
+    monkeypatch.setenv("LINKGRAPH_RUN_ID", "crawl-42")
+    assert run_id_from_env() == "crawl-42"
+    assert run_id_from_env("nightly") == "crawl-42"
