@@ -16,7 +16,8 @@ index, no exchange at all:
   kernel call — counting-sort by dst local + per-segment sort + run scan
   (linkgraph.native). A mode has no streaming combiner (unlike PageRank's
   sum or CC's min), so the votes ARE materialized per block — O(in-edges
-  of the block) memory per task, bounded by |E|/B by construction.
+  of one block) memory at a time in a task, bounded by |E|/B by
+  construction.
 - labels travel the same per-step .npy file transport as ranks/CC labels:
   O(B) files per superstep, page-cache-shared per host, resumable (the
   step directory IS the checkpoint).

@@ -27,9 +27,16 @@ per-partition CSR blocks, PageRank run *on that layout*): the classic
   the engine makes the checkpoint the *transport*: rank vectors live as
   per-block ``.npy`` files on shared storage (``{store}/ranks/<run>/
   step<k>/``); one Spark job per superstep runs the kernel per
-  destination block and returns only (block, l1, dm) scalars. NOTHING
-  fat ever crosses the Arrow boundary or a shuffle — per-superstep Spark
-  traffic is O(B) rows of scalars, no lineage growth, no localCheckpoint.
+  destination block and returns only (block, l1, dm) scalars, which the
+  driver sums in block order. The job has P tasks, P the core count
+  (``supersteps.work_index``), each running every P-th destination block
+  and loading each source block once for all of them, because Spark's
+  fixed cost is per task, not per block. NOTHING fat ever crosses the
+  Arrow boundary or a shuffle — per-superstep Spark traffic
+  is O(B) rows of scalars, no lineage growth, no localCheckpoint. Which
+  source blocks feed a destination block is read from that block's own
+  decoded offset index (``_load_block``); the store keeps no separate
+  (sb, db) pair index.
   The jobs-transport machinery (work index, per-block map job, step
   loop, resume markers, decode) is the shared runtime in
   linkgraph.supersteps, which every blocked operator runs on.
@@ -91,6 +98,7 @@ from .lineage import truncate_plan
 from .pagerank import PageRankResult, SuperstepInfo
 from .supersteps import (
     _write_npy_atomic,
+    block_sums,
     completed_steps,
     map_blocks,
     read_blocks,
@@ -120,7 +128,6 @@ def _cache_max_entries() -> int:
 class BlockedGraph:
     store_path: str            # parquet block store, partitioned by (db, sb)
     build_token: str           # uniquifies worker-side edge caching per build
-    pair_index: DataFrame      # (sb, db, dsize) — one row per non-empty pair
     vmap: DataFrame            # (id, block, local)
     block_meta: DataFrame      # (block, size, od array<int>) — distributed
     n: int
@@ -193,10 +200,10 @@ def build_blocked(
     if n_blocks is None:
         n_blocks = 2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
     build_token = uuid.uuid4().hex
-    # sidecar parquet (_meta/_vmap/_pairs) exists solely so load_blocked()
-    # can reopen the store in a LATER session. An anonymous uuid store in
+    # sidecar parquet (_meta/_vmap) exists solely so load_blocked() can
+    # reopen the store in a LATER session. An anonymous uuid store in
     # tmpfs is unreachable cross-session by construction, so writing its
-    # sidecars is three pure-overhead write jobs per build (~2s at sf0.1);
+    # sidecars costs pure-overhead write jobs per build (~2s at sf0.1);
     # default: persist exactly when the caller named the store.
     if persist_sidecars is None:
         persist_sidecars = store_path is not None
@@ -328,27 +335,11 @@ def build_blocked(
     if n is None:
         n = int(meta_row["nv"] or 0)
 
-    pair_index = truncate_plan(
-        # explicit schema: an EDGELESS graph writes zero db= partitions
-        # and schema inference would fail on the empty directory
-        spark.read.schema("sb int, sl int, dl int, db int")
-        .parquet(f"{store_path}/edges")
-        .select("sb", "db")
-        .distinct()
-        .join(
-            block_meta.select(
-                F.col("block").alias("db"), F.col("size").alias("dsize")
-            ),
-            "db",
-        ),
-        eager=False,  # the _pairs write (or first consumer) materializes it
-    )
     if persist_sidecars:
         # persist the sidecar tables so a BlockedGraph is reloadable
         # without a rebuild (resumable runs; cross-session bench stores)
         block_meta.write.mode("overwrite").parquet(f"{store_path}/_meta")
         vmap.write.mode("overwrite").parquet(f"{store_path}/_vmap")
-        pair_index.write.mode("overwrite").parquet(f"{store_path}/_pairs")
     with open(f"{store_path}/_info.json", "w") as f:
         json.dump(
             {
@@ -365,8 +356,8 @@ def build_blocked(
             f,
         )
     return BlockedGraph(
-        store_path, build_token, pair_index, vmap, block_meta, n, n_dangling,
-        n_blocks, fingerprint or {}, sum_od,
+        store_path, build_token, vmap, block_meta, n, n_dangling, n_blocks,
+        fingerprint or {}, sum_od,
     )
 
 
@@ -693,37 +684,11 @@ def update_blocked(
     n_dangling = int(meta_row["dang"] or 0)
     sum_od = int(meta_row["sum_od"] or 0)
 
-    # --- pair index: touched dbs re-derived, the rest carried over --------
-    dsizes = block_meta.select(
-        F.col("block").alias("db"), F.col("size").alias("dsize")
-    )
-    kept = g.pair_index.select("sb", "db").where(~F.col("db").isin(touched))
-    fresh = (
-        spark.read.parquet(f"{store_path}/edges")
-        .where(F.col("db").isin(touched))
-        .select("sb", "db")
-        .distinct()
-    ) if touched else None
-    pairs = kept if fresh is None else kept.unionByName(fresh)
-    # sidecar stores: materialize NOW — kept reads the OLD _pairs file
-    # that the write below overwrites. Anonymous (in-session) stores have
-    # no _pairs sidecar to clash with, so the index stays lazy like
-    # build_blocked's: it only ever costs a job when something consumes
-    # it (the benched update path never does).
-    pj = pairs.join(dsizes, "db")
-    pair_index = (
-        pj.localCheckpoint()
-        if info.get("sidecars", False)
-        else truncate_plan(pj, eager=False)
-    )
-    _mark('pair-index')
-
     # --- persist sidecars + info ------------------------------------------
     if info.get("sidecars", False):
         vmap = vmap.localCheckpoint()  # plan may read the OLD _vmap
         block_meta.write.mode("overwrite").parquet(f"{store_path}/_meta")
         vmap.write.mode("overwrite").parquet(f"{store_path}/_vmap")
-        pair_index.write.mode("overwrite").parquet(f"{store_path}/_pairs")
     info.update(
         n=n2, n_dangling=n_dangling, build_token=new_token,
         fingerprint=fingerprint or info.get("fingerprint") or {},
@@ -738,13 +703,14 @@ def update_blocked(
     if m_all is not None:
         m_all.unpersist()
     return BlockedGraph(
-        store_path, new_token, pair_index, vmap, block_meta, n2, n_dangling,
-        g.n_blocks, info["fingerprint"], sum_od,
+        store_path, new_token, vmap, block_meta, n2, n_dangling, g.n_blocks,
+        info["fingerprint"], sum_od,
     )
 
 
 def load_blocked(spark, store_path: str) -> BlockedGraph:
-    """Reopen a block store written by build_blocked (no recompute)."""
+    """Reopen a block store written by build_blocked (no recompute). A
+    ``_pairs`` sidecar left by earlier builds is not read."""
     with open(f"{store_path}/_info.json") as f:
         info = json.load(f)
     if not info.get("sidecars", True):
@@ -760,11 +726,9 @@ def load_blocked(spark, store_path: str) -> BlockedGraph:
         )
     vmap = spark.read.parquet(f"{store_path}/_vmap").persist()
     block_meta = truncate_plan(spark.read.parquet(f"{store_path}/_meta"))
-    pair_index = truncate_plan(spark.read.parquet(f"{store_path}/_pairs"))
     return BlockedGraph(
         store_path,
         info["build_token"],
-        pair_index,
         vmap,
         block_meta,
         int(info["n"]),
@@ -1208,13 +1172,15 @@ def _run_barrier(
 ):
     """All supersteps in one barrier-mode job.
 
-    Destination blocks are dealt round-robin to `slots` static partitions;
-    each superstep is: run my kernels -> write my partial (l1, dm) ->
-    slot 0 reduces partials into a global step file -> everyone reads the
-    verdict and advances (the global file also makes the convergence
-    decision identical on every slot). Barrier SCHEDULING guarantees all
-    slots are co-resident, but the per-superstep rendezvous is file-based
-    (atomic renames on the shared rank store + poll): pyspark's
+    Every slot holds the full block list, rotated to its home segment;
+    each superstep is: claim and run kernels -> write my per-block
+    (db, l1, dm) rows -> slot 0 sums every slot's rows in block order
+    (``block_sums``, as the jobs transport does, so both transports give
+    bit-equal scalars and ranks) into a global step file -> everyone
+    reads the verdict and advances (the global file also makes the
+    convergence decision identical on every slot). Barrier SCHEDULING
+    guarantees all slots are co-resident, but the per-superstep rendezvous
+    is file-based (atomic renames on the shared rank store + poll): pyspark's
     ``ctx.barrier()`` costs a hard ~1s per call (measured 1.002s rtt on an
     idle local cluster — a coordinator polling interval), which would
     floor a few-hundred-ms superstep at ~2s. The partial/global files are
@@ -1289,7 +1255,7 @@ def _run_barrier(
         for step in range(start_step, max_iter):
             base = (1.0 - damping) / n + damping * dangling / n
             cur, nxt = f"{rdir}/step{step}", f"{rdir}/step{step + 1}"
-            l1 = dm = 0.0
+            rows = []  # (db, l1, dm) of the blocks this slot claimed
             rs_cache: dict = {}
             claim_dir = f"{rdir}/claim{step}"
             os.makedirs(claim_dir, exist_ok=True)
@@ -1301,14 +1267,13 @@ def _run_barrier(
                     os.close(fd)
                 except FileExistsError:
                     continue  # another slot owns this block this step
-                a, b = _superstep_db(
+                rows.append((db, *_superstep_db(
                     store, token, rdir, db, dsize, n_blocks, cur, nxt, base,
                     damping, rs_cache,
-                )
-                l1 += a
-                dm += b
+                )))
             _write_npy_atomic(
-                f"{rdir}/part/s{step}_t{tid}.npy", np.array([l1, dm])
+                f"{rdir}/part/s{step}_t{tid}.npy",
+                np.array(rows, dtype=np.float64).reshape(-1, 3),
             )
             gpath = f"{rdir}/part/g{step}.npy"
             if tid == 0:
@@ -1317,10 +1282,13 @@ def _run_barrier(
                 _await_files(
                     [f"{rdir}/part/s{step}_t{t_}.npy" for t_ in range(slots)]
                 )
-                tot = np.zeros(2)
-                for t_ in range(slots):
-                    tot += np.load(f"{rdir}/part/s{step}_t{t_}.npy")
-                _write_npy_atomic(gpath, tot)
+                # per-block rows summed in block order (block_sums): the
+                # claims decide which slot ran a block, not the sum order
+                tot = block_sums(np.concatenate([
+                    np.load(f"{rdir}/part/s{step}_t{t_}.npy")
+                    for t_ in range(slots)
+                ]))
+                _write_npy_atomic(gpath, np.array(tot, dtype=np.float64))
                 stale = step - keep_steps + 1
                 if stale >= 0:
                     shutil.rmtree(f"{rdir}/step{stale}", ignore_errors=True)

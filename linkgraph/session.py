@@ -4,6 +4,21 @@ Arrow is always on (the extractor and CSR compactor are pandas UDFs);
 AQE is on (runtime skew-join handling + partition coalescing); shuffle
 partition count is explicit so small fixtures don't pay the 200-partition
 default and big runs can size partitions to executor memory.
+
+Two confs size Spark work to the data rather than to the configured
+partition counts (this factory only builds ``local[...]`` sessions):
+
+- ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`` lets
+  AQE coalesce persisted and checkpointed frames the way it coalesces
+  uncached ones. Spark's default (false) keeps every cached frame at its
+  ``spark.sql.shuffle.partitions`` layout, so each later scan of a small
+  cached frame runs that many tasks.
+- ``spark.sql.sources.parallelPartitionDiscovery.threshold`` is raised so
+  file listing stays on the driver. Above the default 32 child paths,
+  ``InMemoryFileIndex`` lists in a Spark job with one task per directory
+  (a read of a 64-block store's ``db=`` partitions is a 64-task job); in
+  local mode that job runs on the same cores the driver would list with
+  and only adds scheduling cost.
 """
 
 from __future__ import annotations
@@ -67,6 +82,13 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            "2147483647",
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")

@@ -6,14 +6,15 @@ block store (linkgraph.pagerank_csr): per-block state vectors live as
 Spark job over a per-destination-block work index whose tasks run the
 operator's kernel and return O(1) scalars per block. Nothing O(V) crosses
 the Arrow boundary or a shuffle; per-superstep driver traffic is O(B)
-scalar rows. This module owns that machinery, so an operator only
-supplies its prep and its per-destination-block kernel:
+scalar rows, summed on the driver in block order. This module owns that
+machinery, so an operator only supplies its prep and its
+per-destination-block kernel:
 
 - ``fill_blocks`` / ``seed_blocks``: constant and seeded step-0 vectors;
-- ``work_index``: the (db, dsize) rows, range-clustered one block per
-  task;
+- ``work_index``: the (db, dsize) rows, dealt out strided to one task
+  per core (``core_grant``);
 - ``map_blocks``: one job running a kernel on every destination block,
-  returning the summed scalars;
+  returning the per-block scalars summed by ``block_sums``;
 - ``scatter_in`` / ``gather_in``: the in-edge walk of one destination
   block (source blocks with edges here, cached source vectors, the
   packed/wide/weighted native kernel dispatch);
@@ -118,29 +119,64 @@ def seed_blocks(g, pos: DataFrame, out_dir: str, fill: float,
     )
 
 
+def core_grant(sc) -> int:
+    """Cores the application may run tasks on at once:
+    ``spark.cores.max`` when set (a standalone cluster's grant, whose
+    ``defaultParallelism`` is clamped to >= 2 and counts only the
+    executors registered so far), else ``defaultParallelism``."""
+    cores_max = sc.getConf().get("spark.cores.max")
+    return int(cores_max) if cores_max else sc.defaultParallelism
+
+
 def work_index(g) -> DataFrame:
     """Static per-superstep work index: ONE row (db, dsize) per
     destination block (the per-db offset index in the decoded store says
     which source blocks feed it; blocks with no in-edges still run their
-    kernel each step). The repartition happens BEFORE truncation, so the
-    cached LogicalRDD is physically range-clustered by db into exactly B
-    partitions (~one destination block per task) and a superstep job is
-    a SINGLE mapInPandas stage — no exchange at all, which also means
-    AQE's size-based partition coalescing can never collapse the (few-KB!)
-    work rows into one task and serialize the kernels."""
+    kernel each step), in ``P = min(B, core_grant)`` partitions: one
+    superstep task per core, task k running the blocks with
+    ``db % P == k`` (range partitioning on ``(db % P, db)``: exact when
+    P divides B, else boundaries shift by a block or so).
+
+    Tasks, not blocks, carry Spark's fixed per-task cost (a Python task
+    costs ~0.3 s even when it does nothing), so B tasks per superstep
+    made a superstep's wall time follow B instead of the graph. With one
+    task per core nothing rebalances a superstep at run time, so the
+    blocks are dealt out strided: under range blocking in-edges can pile
+    up in a run of adjacent blocks (popular low ids, big hosts), and a
+    contiguous run of B/P blocks would hand one task all of them (4
+    cores, a 96M-edge store whose heaviest block held 8.5x the mean:
+    label-propagation supersteps took 1.9 s strided, 2.5 s contiguous).
+    A task shares one
+    source-vector cache across its blocks (``map_blocks``), loading each
+    source block at most once per superstep; that cache can reach the
+    whole vertex vector, as it could for a single block under hash
+    blocking. The repartition happens BEFORE truncation, so the cached
+    LogicalRDD keeps its explicit partition count and a superstep job is
+    a SINGLE mapInPandas stage — no exchange, hence nothing AQE could
+    coalesce into one task."""
+    p = min(g.n_blocks, core_grant(g.block_meta.sparkSession.sparkContext))
     return truncate_plan(
         g.block_meta.select(
             F.col("block").alias("db"), F.col("size").alias("dsize")
-        ).repartitionByRange(g.n_blocks, "db")
+        ).repartitionByRange(p, F.col("db") % p, "db")
     )
+
+
+def block_sums(rows) -> tuple:
+    """Column sums of per-block scalar rows ``(block, v1, v2, ...)``,
+    added in ascending block order: the reduction order follows the
+    blocks, not the task layout or work stealing, so equal per-block
+    values give bit-equal sums under either transport."""
+    rows = sorted(rows, key=lambda r: r[0])
+    return tuple(sum(col) for col in list(zip(*rows))[1:])
 
 
 def map_blocks(work: DataFrame, kernel, schema: str) -> tuple:
     """Run ``kernel(db, dsize, cache) -> tuple of scalars`` on every row
-    of ``work`` in ONE Spark job (kernel + scalar aggregate in the same
-    action) and return the per-column sums, in ``schema`` order (e.g.
-    ``"l1 double, dm double"``). ``cache`` is a per-task dict for source
-    vectors shared by the blocks a task runs (see ``scatter_in``)."""
+    of ``work`` in ONE Spark job and return the per-column sums
+    (``block_sums`` of the collected per-block rows), in ``schema`` order
+    (e.g. ``"l1 double, dm double"``). ``cache`` is a per-task dict for
+    source vectors shared by the blocks a task runs (see ``scatter_in``)."""
     names = [c.split()[0] for c in schema.split(",")]
 
     def task(batches):
@@ -157,12 +193,9 @@ def map_blocks(work: DataFrame, kernel, schema: str) -> tuple:
         ]
         yield pd.DataFrame(rows, columns=["block", *names])
 
-    row = (
-        work.mapInPandas(task, f"block int, {schema}")
-        .agg(*[F.sum(c).alias(c) for c in names])
-        .collect()[0]
-    )
-    return tuple(row)
+    rows = work.mapInPandas(task, f"block int, {schema}").collect()
+    # no rows: None per column, as Spark's sum over nothing
+    return block_sums(rows) or (None,) * len(names)
 
 
 def cached(cache: dict, key, load):

@@ -33,6 +33,7 @@ from pyspark.sql import SparkSession, functions as F
 
 from linkgraph.extract import extract_links_udf
 from linkgraph.pagerank_csr import build_blocked, load_blocked, pagerank_blocked
+from linkgraph.supersteps import core_grant
 from linkgraph.synthgraph import synth_edges, synth_vertices
 
 
@@ -567,8 +568,7 @@ def main() -> None:
     # defaultParallelism is clamped to >=2, which on a 1-core cluster asks
     # the barrier stage for more simultaneous slots than exist and hangs
     # the scheduler until the barrier-check timeout
-    cores_max = spark.conf.get("spark.cores.max", None)
-    slots = int(cores_max) if cores_max else spark.sparkContext.defaultParallelism
+    slots = core_grant(spark.sparkContext)
     res = pagerank_blocked(
         spark, g, tol=0.0, max_iter=supersteps, transport="barrier",
         barrier_slots=slots,

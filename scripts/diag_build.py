@@ -112,21 +112,6 @@ def main() -> None:
         )
         mark("e2 join+repartition+sort+write")
 
-        pair_index = truncate_plan(
-            spark.read.schema("sb int, sl int, dl int, db int")
-            .parquet(f"{store_path}/edges")
-            .select("sb", "db")
-            .distinct()
-            .join(
-                block_meta.select(
-                    F.col("block").alias("db"), F.col("size").alias("dsize")
-                ),
-                "db",
-            ),
-            eager=False,
-        )
-        pair_index.count()
-        mark("pair_index readback+distinct+count")
         vmap.unpersist()
         import shutil
         shutil.rmtree(store_path, ignore_errors=True)

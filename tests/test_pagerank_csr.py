@@ -65,6 +65,31 @@ def test_barrier_transport_equals_jobs(spark, small, blocked):
     assert len(barr.supersteps) == 15
 
 
+def test_barrier_bit_identical_to_itself_and_jobs(spark, blocked):
+    """Work-stealing claims decide which slot runs a block, not the order
+    the per-block scalars are summed in: repeated barrier runs and the
+    jobs transport give the same bits, per-step scalars and ranks."""
+
+    def bits(res):
+        steps = [(s.l1_delta.hex(), s.dangling_mass.hex())
+                 for s in res.supersteps]
+        ranks = sorted(
+            (r["id"], r["rank"].hex()) for r in res.ranks.collect()
+        )
+        return steps, ranks
+
+    runs = [
+        bits(pagerank_blocked(
+            spark, blocked, tol=0.0, max_iter=5, transport="barrier",
+            barrier_slots=2,
+        ))
+        for _ in range(3)
+    ]
+    jobs = bits(pagerank_blocked(spark, blocked, tol=0.0, max_iter=5))
+    assert runs[0] == runs[1] == runs[2]
+    assert runs[0] == jobs
+
+
 def test_barrier_converges_like_jobs(spark, small, blocked):
     barr = pagerank_blocked(
         spark, blocked, tol=1e-8, max_iter=200, transport="barrier",

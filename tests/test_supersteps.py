@@ -1,20 +1,24 @@
 """The shared blocked superstep runtime: the step loop's marker, cleanup
-and stop contract, and per-superstep Spark job budgets."""
+and stop contract, block-order sums, and per-superstep Spark job and task
+budgets."""
 
 import os
+import time
 import uuid
+from types import SimpleNamespace
 
 import pytest
 
 from linkgraph.graph import undirected_edges
 from linkgraph.labelprop_csr import label_propagation_blocked
 from linkgraph.pagerank_csr import build_blocked, pagerank_blocked
-from linkgraph.supersteps import completed_steps, run_steps
+from linkgraph.supersteps import (
+    block_sums, completed_steps, core_grant, run_steps, work_index,
+)
 
-# Spark jobs of ONE jobs-transport superstep: the map stage with its
-# partial aggregate, then the final aggregate (AQE runs each query stage
-# as a job of its own)
-STEP_JOBS = 2
+# Spark jobs of ONE jobs-transport superstep: the map-only stage whose
+# per-block scalar rows are collected and summed on the driver
+STEP_JOBS = 1
 
 
 def test_run_steps_markers_cleanup_and_stop(tmp_path):
@@ -43,15 +47,40 @@ def test_run_steps_markers_cleanup_and_stop(tmp_path):
     assert len(completed_steps(rdir)) == 6
 
 
-def _count_jobs(spark, fn) -> int:
+def test_block_sums_follow_block_order():
+    rows = [(2, 1.0, 3), (0, 1e16, 1), (1, -1e16, 2)]
+    # block order: (1e16 + -1e16) + 1.0 == 1.0; in arrival order the 1.0
+    # would be absorbed by 1e16 first and the sum would be 0.0
+    assert block_sums(rows) == block_sums(rows[::-1]) == (1.0, 6)
+    assert block_sums([]) == ()
+
+
+def _group_stages(spark, fn) -> tuple[int, list[int]]:
+    """-> (Spark jobs, completed tasks per stage) that ``fn`` ran, read
+    through a job group of its own once every job reports its end."""
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
     group = f"budget-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = tracker.getJobIdsForGroup(group)
+    deadline = time.monotonic() + 30
+    while time.monotonic() < deadline and any(
+        tracker.getJobInfo(j).status == "RUNNING" for j in jobs
+    ):
+        time.sleep(0.05)  # the status store trails the listener bus
+    stages = [
+        tracker.getStageInfo(s)
+        for j in jobs for s in tracker.getJobInfo(j).stageIds
+    ]
+    return len(jobs), [st.numCompletedTasks for st in stages if st]
+
+
+def _count_jobs(spark, fn) -> int:
+    return _group_stages(spark, fn)[0]
 
 
 @pytest.fixture(scope="module")
@@ -86,3 +115,61 @@ def test_label_propagation_superstep_job_budget(spark, stores):
         for k in (2, 3)
     ]
     assert jobs[1] - jobs[0] == STEP_JOBS, jobs
+
+
+def test_superstep_runs_one_task_per_core(spark, small):
+    """More blocks than cores: one superstep runs exactly one task per
+    core (fewer would run kernels serially, more pays the per-task cost
+    again), and task k runs the blocks with db % cores == k."""
+    cores = spark.sparkContext.defaultParallelism
+    g = build_blocked(
+        spark, small.edges, small.vertices.select("id"), n_blocks=3 * cores
+    )
+    try:
+        layout = (
+            work_index(g).rdd.glom()
+            .map(lambda rows: sorted(r.db for r in rows)).collect()
+        )
+        pagerank_blocked(spark, g, tol=0.0, max_iter=1)  # warm-up
+        runs = [
+            _group_stages(
+                spark,
+                lambda k=k: pagerank_blocked(spark, g, tol=0.0, max_iter=k),
+            )
+            for k in (2, 3)
+        ]
+    finally:
+        g.delete()
+    assert layout == [
+        [k, k + cores, k + 2 * cores] for k in range(cores)
+    ], layout
+    (jobs2, tasks2), (jobs3, tasks3) = runs
+    assert jobs3 - jobs2 == STEP_JOBS, runs
+    assert sum(tasks3) - sum(tasks2) == cores, runs
+
+
+def test_core_grant_prefers_cores_max():
+    def context(conf):
+        return SimpleNamespace(defaultParallelism=2, getConf=lambda: conf)
+
+    assert core_grant(context({"spark.cores.max": "4"})) == 4
+    assert core_grant(context({})) == 2
+
+
+def test_build_blocked_lists_store_on_driver(spark, small, tmp_path):
+    """A named store with more db= directories than Spark's parallel
+    listing threshold (32): its read-backs list the directories on the
+    driver, not in a job with one task per directory."""
+    built = []
+    try:
+        _, tasks = _group_stages(spark, lambda: built.append(build_blocked(
+            spark, small.edges, small.vertices.select("id"),
+            n_blocks=37, store_path=str(tmp_path / "store"),
+        )))
+        edges_dir = tmp_path / "store" / "edges"
+        n_dirs = sum(d.startswith("db=") for d in os.listdir(edges_dir))
+    finally:
+        for g in built:
+            g.delete()
+    assert n_dirs > 32, n_dirs
+    assert max(tasks) < n_dirs, tasks

@@ -7,7 +7,9 @@ import random
 
 import pytest
 
-from linkgraph.pagerank_csr import build_blocked, pagerank_blocked, update_blocked
+from linkgraph.pagerank_csr import (
+    build_blocked, load_blocked, pagerank_blocked, update_blocked,
+)
 
 from conftest import collect_map
 
@@ -168,3 +170,36 @@ def test_warm_start_after_update(spark, tmp_path):
     assert set(a) == set(b)
     for k in a:
         assert math.isclose(a[k], b[k], rel_tol=1e-6, abs_tol=1e-9), k
+
+
+def test_load_blocked_round_trip_after_update(spark, tmp_path):
+    """build -> update -> load_blocked reopens the updated store: same
+    metadata and bit-identical ranks as the in-session handle, also when
+    the directory still holds the ``_pairs`` sidecar of earlier builds."""
+    full = _digraph(11, N, 200)
+    old = {e for e in full if max(e) < N - 5 and (e[0] + 2 * e[1]) % 7}
+    added = full - old
+    removed = set(sorted(old)[:10])
+    store = str(tmp_path / "store")
+    g0 = build_blocked(
+        spark, _edf(spark, old), _vdf(spark, range(N - 5)),
+        n_blocks=4, store_path=store,
+    )
+    g1 = update_blocked(
+        spark, g0, added=_edf(spark, added), removed=_edf(spark, removed),
+        new_vertices=_vdf(spark, range(N)),
+    )
+    ref = _ranks(spark, g1, iters=3)
+    try:
+        for legacy_pairs in (False, True):
+            if legacy_pairs:
+                spark.createDataFrame(
+                    [(0, 0, 1)], "sb int, db int, dsize int"
+                ).write.mode("overwrite").parquet(f"{store}/_pairs")
+            g2 = load_blocked(spark, store)
+            for f in ("n", "n_dangling", "n_blocks", "sum_od"):
+                assert getattr(g2, f) == getattr(g1, f), (f, legacy_pairs)
+            assert _ranks(spark, g2, iters=3) == ref, legacy_pairs
+            g2.unpersist()
+    finally:
+        g1.delete()
