@@ -48,7 +48,6 @@ import time
 import uuid
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from . import native
@@ -62,6 +61,7 @@ from .supersteps import (
     map_blocks,
     read_blocks,
     run_steps,
+    scatter_ranks,
     work_index,
 )
 
@@ -168,27 +168,10 @@ def label_propagation_blocked(
         truncate_plan(id_ranks(g.vmap.select("id"))).persist()
     )
 
-    # step0: per-block initial label files = each vertex's own rank,
-    # scattered into local order (one O(V) shuffle, the only one anywhere
-    # in this operator — init, not per-superstep)
-    def prep_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        os.makedirs(f"{rdir}/step0", exist_ok=True)
-        b = int(pdf["block"].iloc[0])
-        arr = np.empty(len(pdf), dtype=np.float64)
-        arr[pdf["local"].to_numpy(dtype=np.int64)] = pdf["rank"].to_numpy(
-            dtype=np.float64
-        )
-        _write_npy_atomic(f"{rdir}/step0/b{b}.npy", arr)
-        return pd.DataFrame({"block": [b]})
-
+    # step0: per-block initial label files = each vertex's own rank (the
+    # only O(V) shuffle anywhere in this operator — init, not per-superstep)
     if start == 0:
-        (
-            g.vmap.join(ranks, "id")
-            .select("block", "local", "rank")
-            .groupBy("block")
-            .applyInPandas(prep_kernel, "block int")
-            .count()
-        )
+        scatter_ranks(g, ranks, f"{rdir}/step0")
 
     work = work_index(g)
 

@@ -56,7 +56,6 @@ import shutil
 import uuid
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .caching import register_cache
@@ -69,6 +68,7 @@ from .supersteps import (
     read_blocks,
     run_steps,
     scatter_in,
+    scatter_ranks,
     work_index,
 )
 
@@ -111,27 +111,7 @@ def mis_blocked(
     )
 
     # prep: per-block priority-rank vectors + all-undecided step0 state
-    def prep_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        os.makedirs(f"{rdir}/prio", exist_ok=True)
-        os.makedirs(f"{rdir}/step0", exist_ok=True)
-        b = int(pdf["block"].iloc[0])
-        arr = np.empty(len(pdf), dtype=np.float64)
-        arr[pdf["local"].to_numpy(dtype=np.int64)] = pdf["rank"].to_numpy(
-            dtype=np.float64
-        )
-        _write_npy_atomic(f"{rdir}/prio/b{b}.npy", arr)
-        _write_npy_atomic(
-            f"{rdir}/step0/b{b}.npy", np.zeros(len(pdf), dtype=np.float64)
-        )
-        return pd.DataFrame({"block": [b]})
-
-    (
-        g.vmap.join(ranks, "id")
-        .select("block", "local", "rank")
-        .groupBy("block")
-        .applyInPandas(prep_kernel, "block int")
-        .count()
-    )
+    scatter_ranks(g, ranks, f"{rdir}/prio", fills={f"{rdir}/step0": 0.0})
 
     work = work_index(g)
     und_per: list[int] = []

@@ -405,14 +405,6 @@ def update_blocked(
         info = json.load(f)
     new_token = uuid.uuid4().hex
 
-    _t = [time.perf_counter()]
-
-    def _mark(label: str) -> None:  # opt-in phase timing for perf triage
-        if os.environ.get("LINKGRAPH_UPDATE_TIMING"):
-            now = time.perf_counter()
-            print(f"update_blocked[{label}]: {now - _t[0]:.2f}s", flush=True)
-            _t[0] = now
-
     # --- vertex extension -------------------------------------------------
     vmap = g.vmap
     n_new = 0
@@ -441,7 +433,6 @@ def update_blocked(
         vmap = vmap.unionByName(nv_map).persist()
         n_new = vmap.count() - g.n  # materializes the union once
     n2 = g.n + n_new
-    _mark('vertex-extend')
 
     # --- normalize the delta against stored rows --------------------------
     src_map = vmap.select(
@@ -507,7 +498,6 @@ def update_blocked(
             rem_m = m_all.where(F.col("kind") == "r").select(*cols_k)
     else:
         m_all = None
-    _mark('map-deltas')
     if add_m is None and rem_m is None and n_new == 0:
         raise ValueError("update_blocked: empty delta")
 
@@ -556,7 +546,6 @@ def update_blocked(
         smalls = flag.where(
             F.col("is_rem").isNotNull() | F.col("is_add").isNotNull()
         ).localCheckpoint(eager=add_m is None)
-        _mark('smalls-scan')
         if rem_m is not None:
             rem_eff = smalls.where(F.col("is_rem").isNotNull()).select(*cols)
         if add_m is not None:
@@ -566,7 +555,6 @@ def update_blocked(
             add_eff = add_m.join(
                 F.broadcast(present_add), cols, "left_anti"
             ).localCheckpoint(eager=False)
-            _mark('add-eff')
 
         new_rows = old_rows
         if rem_m is not None:
@@ -592,7 +580,6 @@ def update_blocked(
             if os.path.isdir(src_dir):
                 os.replace(src_dir, dst_dir)
         shutil.rmtree(stage, ignore_errors=True)
-        _mark('stage-swap')
 
     # --- patch block metadata positionally --------------------------------
     # numpy scatter via applyInPandas, NOT a per-element map lookup:
@@ -674,7 +661,6 @@ def update_blocked(
         ),
         eager=False,
     )
-    _mark('meta-patch')
     meta_row = block_meta.agg(
         F.sum(F.size(F.filter("od", lambda x: x == 0))).alias("dang"),
         F.sum(

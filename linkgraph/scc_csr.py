@@ -36,7 +36,6 @@ import shutil
 import uuid
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .caching import register_cache
@@ -50,6 +49,7 @@ from .supersteps import (
     read_blocks,
     run_steps,
     scatter_in,
+    scatter_ranks,
     work_index,
 )
 
@@ -114,30 +114,9 @@ def strongly_connected_components_blocked(
         truncate_plan(id_ranks(g_fwd.vmap.select("id"))).persist()
     )
 
-    def prep_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        for d in ("rank", "active0", "comp0"):
-            os.makedirs(f"{rdir}/{d}", exist_ok=True)
-        b = int(pdf["block"].iloc[0])
-        arr = np.empty(len(pdf), dtype=np.float64)
-        arr[pdf["local"].to_numpy(dtype=np.int64)] = pdf["rank"].to_numpy(
-            dtype=np.float64
-        )
-        _write_npy_atomic(f"{rdir}/rank/b{b}.npy", arr)
-        _write_npy_atomic(
-            f"{rdir}/active0/b{b}.npy", np.ones(len(pdf), dtype=np.float64)
-        )
-        _write_npy_atomic(
-            f"{rdir}/comp0/b{b}.npy",
-            np.full(len(pdf), np.nan, dtype=np.float64),
-        )
-        return pd.DataFrame({"block": [b]})
-
-    (
-        g_fwd.vmap.join(ranks, "id")
-        .select("block", "local", "rank")
-        .groupBy("block")
-        .applyInPandas(prep_kernel, "block int")
-        .count()
+    scatter_ranks(
+        g_fwd, ranks, f"{rdir}/rank",
+        fills={f"{rdir}/active0": 1.0, f"{rdir}/comp0": np.nan},
     )
 
     av, cv = 0, 0  # active / comp version counters

@@ -24,8 +24,63 @@ partition counts (this factory only builds ``local[...]`` sessions):
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import SparkSession
+
+SHM_LOCAL_ROOT = "/dev/shm/linkgraph-spark-local"
+
+
+def process_local_dir(root: str) -> str:
+    """This process's own ``spark.local.dir`` under ``root``
+    (``root/pid-<pid>``), after removing the ``pid-*`` siblings whose
+    process is gone.
+
+    A JVM that dies without its shutdown hook leaves its ``blockmgr-*`` /
+    ``spark-*`` shuffle directories behind, and on tmpfs they hold RAM
+    until someone deletes them. Keyed by the owning driver process, a
+    later session can tell a dead run's directories from a live one's."""
+    os.makedirs(root, exist_ok=True)
+    for name in os.listdir(root):
+        pid = name[len("pid-"):]
+        if name.startswith("pid-") and pid.isdigit() and not _alive(int(pid)):
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+    own = os.path.join(root, f"pid-{os.getpid()}")
+    os.makedirs(own, exist_ok=True)
+    return own
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # exists, owned by another user
+        pass
+    return True
+
+
+def _local_dir() -> str | None:
+    """``spark.local.dir`` of a new session: $LINKGRAPH_LOCAL_DIR as is,
+    else this process's directory under ``SHM_LOCAL_ROOT`` when /dev/shm
+    has room, else None (Spark's default)."""
+    # Shuffle files on tmpfs when available: this factory only ever builds
+    # local[...] sessions (a cluster gets its local dirs from the resource
+    # manager), and local shuffles are otherwise bottlenecked on one disk.
+    # Gated on actual free space (tmpfs is typically capped at 50% of RAM;
+    # spilling a big run into a nearly-full /dev/shm fails where plain disk
+    # would succeed — ADVICE round 1).
+    if "LINKGRAPH_LOCAL_DIR" in os.environ:
+        return os.environ["LINKGRAPH_LOCAL_DIR"]
+    if not os.path.isdir("/dev/shm"):
+        return None
+    try:
+        st = os.statvfs("/dev/shm")
+        free_bytes = st.f_bavail * st.f_frsize
+    except OSError:
+        free_bytes = 0
+    min_free = int(os.environ.get("LINKGRAPH_SHM_MIN_FREE_BYTES", str(8 << 30)))
+    return process_local_dir(SHM_LOCAL_ROOT) if free_bytes >= min_free else None
 
 
 def get_spark(
@@ -56,25 +111,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("LINKGRAPH_SHUFFLE_PARTITIONS", "32"))
 
-    # Shuffle files on tmpfs when available: this factory only ever builds
-    # local[...] sessions (a cluster gets its local dirs from the resource
-    # manager), and local shuffles are otherwise bottlenecked on one disk.
-    # Gated on actual free space (tmpfs is typically capped at 50% of RAM;
-    # spilling a big run into a nearly-full /dev/shm fails where plain disk
-    # would succeed — ADVICE round 1). $LINKGRAPH_LOCAL_DIR overrides.
-    local_dir = os.environ.get("LINKGRAPH_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        try:
-            st = os.statvfs("/dev/shm")
-            free_bytes = st.f_bavail * st.f_frsize
-        except OSError:
-            free_bytes = 0
-        min_free = int(
-            os.environ.get("LINKGRAPH_SHM_MIN_FREE_BYTES", str(8 << 30))
-        )
-        if free_bytes >= min_free:
-            local_dir = "/dev/shm/linkgraph-spark-local"
-
+    local_dir = _local_dir()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")

@@ -10,7 +10,8 @@ scalar rows, summed on the driver in block order. This module owns that
 machinery, so an operator only supplies its prep and its
 per-destination-block kernel:
 
-- ``fill_blocks`` / ``seed_blocks``: constant and seeded step-0 vectors;
+- ``fill_blocks`` / ``seed_blocks`` / ``scatter_ranks``: constant,
+  seeded and per-vertex-rank step-0 vectors;
 - ``work_index``: the (db, dsize) rows, dealt out strided to one task
   per core (``core_grant``);
 - ``map_blocks``: one job running a kernel on every destination block,
@@ -115,6 +116,39 @@ def seed_blocks(g, pos: DataFrame, out_dir: str, fill: float,
         .join(g.block_meta.select("block", "size"), "block")
         .groupBy("block")
         .applyInPandas(seed_kernel, "block int")
+        .count()
+    )
+
+
+def scatter_ranks(g, ranks: DataFrame, out_dir: str,
+                  fills: dict[str, float] | None = None) -> None:
+    """Step-0 vectors from per-vertex ranks: ``{out_dir}/b<block>.npy``
+    holds the ``rank`` column of ``ranks`` (id, rank) at each vertex's
+    local position; every ``fills`` directory gets a same-size vector of
+    its constant in the same task (one job over ``g.vmap`` joined with
+    ``ranks``, the operator's one O(V) init shuffle)."""
+    fills = fills or {}
+
+    def rank_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        b = int(pdf["block"].iloc[0])
+        arr = np.empty(len(pdf), dtype=np.float64)
+        arr[pdf["local"].to_numpy(dtype=np.int64)] = pdf["rank"].to_numpy(
+            dtype=np.float64
+        )
+        os.makedirs(out_dir, exist_ok=True)
+        _write_npy_atomic(f"{out_dir}/b{b}.npy", arr)
+        for d, value in fills.items():
+            os.makedirs(d, exist_ok=True)
+            _write_npy_atomic(
+                f"{d}/b{b}.npy", np.full(len(pdf), value, dtype=np.float64)
+            )
+        return pd.DataFrame({"block": [b]})
+
+    (
+        g.vmap.join(ranks, "id")
+        .select("block", "local", "rank")
+        .groupBy("block")
+        .applyInPandas(rank_kernel, "block int")
         .count()
     )
 

@@ -23,49 +23,24 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
-import time
 from pathlib import Path
 
-os.environ.setdefault("BENCH_N_VERTICES", "8000000")
-os.environ.setdefault("BENCH_AVG_DEG", "42")
-os.environ["BENCH_SUPERSTEPS"] = os.environ.get("DIAG_SUPERSTEPS", "3")
-os.environ.setdefault("BENCH_N_PAGES", "1000")
-os.environ.setdefault("BENCH_N_BLOCKS", "256")
-os.environ.setdefault("BENCH_STORE", "/tmp/linkgraph-cluster-store-lpblk")
-
 sys.path.insert(0, str(Path(__file__).resolve().parent))
-import bench_cluster as bc  # noqa: E402
-
-REPO = Path(__file__).resolve().parent.parent
+import bench_scaling as bs  # noqa: E402
 
 
 def main() -> None:
-    subprocess.run(
-        [sys.executable, str(REPO / "scripts" / "make_package.py")],
-        check=True,
-    )
-    os.makedirs(bc.ENV["SPARK_LOG_DIR"], exist_ok=True)
-    master = None
-    workers = []
+    # the lpblk gate's graph and store, run for a few supersteps only
+    cfg = {
+        **bs.settings(bs.OPS["lpblk"]),
+        "BENCH_SUPERSTEPS": os.environ.get("DIAG_SUPERSTEPS", "3"),
+    }
     out = {}
-    try:
-        master = bc.spark_class(
-            "org.apache.spark.deploy.master.Master",
-            "--host", "127.0.0.1", "--port", "7077",
-            "--webui-port", "8090",
-            cpus=bc.CONTROL_CPUS,
-        )
-        time.sleep(6)
-        workers = [
-            bc.start_worker(bc.EXECUTOR_CORES, "8g", 8091 + i, cpus=cpus)
-            for i, cpus in enumerate(bc.WORKER_CPU_SETS)
-        ]
-        time.sleep(6)
-        for cores_max in sorted(bc.LEVELS):
+    with bs.cluster(cfg, prep_mode=None):  # the store is already built
+        for cores_max in bs.LEVELS:
             print(f"diag: cores.max={cores_max} ...", file=sys.stderr)
-            r = bc.submit(cores_max, mode="run-lpblk", timeout=5400)
+            r = bs.submit(cfg, cores_max, "run-lpblk")
             walls = r["lp_steps"]
             kerns = r["lp_kernel_secs"]
             coords = [
@@ -77,9 +52,6 @@ def main() -> None:
                 "coordination_walls": coords,
             }
             print(json.dumps({str(cores_max): out[cores_max]}))
-    finally:
-        for p in workers + [master]:
-            bc._kill(p)
     print("DIAG " + json.dumps(out))
 
 
